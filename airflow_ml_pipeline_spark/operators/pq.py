@@ -69,7 +69,11 @@ from airflow_ml_pipeline_spark.operators.similarity import (
     ivf_assign,
 )
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_spread, load_table
+from airflow_ml_pipeline_spark.sources.catalog import (
+    load_spread,
+    load_table,
+    table_fingerprint,
+)
 
 
 def _pq_b_tables() -> list[list[list[float]]]:
@@ -946,11 +950,7 @@ _CELL_COUNTS: dict[tuple[str, str], dict[int, int]] = {}
 
 
 def _cell_counts(spark: SparkSession, sf_dir: str) -> dict[int, int]:
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    key = (sf_dir, _embeddings_fingerprint(sf_dir))
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     if key not in _CELL_COUNTS:
         # evict stale fingerprints for the same sf_dir (ADVICE r14:
         # unlike similarity._IVF_INDEX this cache never dropped entries
@@ -1107,22 +1107,11 @@ def _pq_store_dir(sf_dir: str) -> str:
     """The on-disk IVF-PQ store for this corpus version: a parquet tree
     PARTITIONED BY cluster_id — the physical layout the module docstring
     promises (cell id as the partition key), which is what makes the
-    rebalance overwrite cell-scoped. Fingerprint-tagged + stale-tag
-    pruned like every ingest store."""
-    import os
+    rebalance overwrite cell-scoped. One ingest state family
+    (``ingest.state_dirs``), so it is keyed and pruned like every store."""
+    from airflow_ml_pipeline_spark.streaming.ingest import state_dirs
 
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-    from airflow_ml_pipeline_spark.streaming.ingest import (
-        INGEST_ROOT,
-        _prune_stale_tags,
-    )
-
-    base = f"pqidx-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    return os.path.join(INGEST_ROOT, tag, "store")
+    return state_dirs("pqidx", sf_dir, "embeddings", "store")[0]
 
 
 def _pq_stale_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,11 @@ from airflow_ml_pipeline_spark.functions.compare import (
 )
 from airflow_ml_pipeline_spark.functions.vectors import dot, l2_norm
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_spread, load_table
+from airflow_ml_pipeline_spark.sources.catalog import (
+    load_spread,
+    load_table,
+    table_fingerprint,
+)
 
 QUERY_VEC_ID = 0  # the corpus vector used as the standing query
 TOP_K = 10
@@ -318,11 +322,10 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, k: int = 16):
 
     import numpy as np
 
-    # cache key includes a content fingerprint of the source parquet
-    # (path + per-file mtime/size): a corpus regenerated in place must
-    # rebuild the index, not serve stale cluster assignments — same
-    # staleness contract as the rollup store (operators/temporal.py)
-    key = (sf_dir, _embeddings_fingerprint(sf_dir))
+    # cache key includes the table's content fingerprint: a corpus
+    # regenerated in place must rebuild the index, not serve stale
+    # cluster assignments
+    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
     cached = _IVF_INDEX.get(key)
     if cached is not None:
         return cached
@@ -337,23 +340,6 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, k: int = 16):
         _IVF_INDEX.pop(stale)[0].unpersist()
     _IVF_INDEX[key] = (indexed, cn)
     return _IVF_INDEX[key]
-
-
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """Hash of the embeddings parquet's path + file (mtime_ns, size) set."""
-    import hashlib
-    import os
-
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:16]
 
 
 def drop_ivf_index(sf_dir: str) -> None:

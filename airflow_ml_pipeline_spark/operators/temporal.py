@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from airflow_ml_pipeline_spark.functions.compare import SQL_DSUM, SQL_TS, fmt_ts
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_table
+from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerprint
 
 
 def asof_join_last_event(
@@ -308,25 +308,16 @@ _ROLLUP_STAGE = "/tmp/spark_graft_rollup"
 
 
 def _rollup_stage_dir(sf_dir: str) -> str:
-    """Stage dir keyed on a content fingerprint of the source corpus, not just
-    the sf_dir basename: the fingerprint hashes the absolute sf_dir path plus
-    the (mtime_ns, size) of every file under events.parquet, so a corpus
-    regenerated in place, or two sf_dirs sharing a basename, get distinct
-    stage dirs instead of silently serving a stale rollup. In production this
-    is the refresh-watermark check of the scheduled incremental job."""
-    import hashlib
-
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
+    """Stage dir keyed on the events table's content fingerprint
+    (``catalog.table_fingerprint``), not just the sf_dir basename, so a
+    corpus regenerated in place, or two sf_dirs sharing a basename, get
+    distinct stage dirs instead of silently serving a stale rollup. In
+    production this is the refresh-watermark check of the scheduled
+    incremental job."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_ROLLUP_STAGE, f"{tag}-{h.hexdigest()[:16]}")
+    return os.path.join(
+        _ROLLUP_STAGE, f"{tag}-{table_fingerprint(sf_dir, 'events')}"
+    )
 
 
 @query(

@@ -8,6 +8,7 @@ predicate/partition pushdown for free; CSV is kept only for reference parity.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +70,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_time(df)
     return df
+
+
+def table_fingerprint(sf_dir: str, name: str) -> str:
+    """Content version of one corpus table: sha256 over the table's
+    absolute path plus each file's (name, mtime_ns, size), first 16 hex
+    digits. Every store, stage and cache derived from a table is keyed by
+    it, so a table regenerated in place, or two sf_dirs sharing a
+    basename, never serve each other's state."""
+    if name not in schemas.TESTDATA:
+        raise ValueError(f"Unknown table: {name}")
+    src = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    h = hashlib.sha256(src.encode())
+    if os.path.isdir(src):
+        for f in sorted(os.listdir(src)):
+            st = os.stat(os.path.join(src, f))
+            h.update(f"{f}:{st.st_mtime_ns}:{st.st_size};".encode())
+    elif os.path.exists(src):
+        st = os.stat(src)
+        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
+    return h.hexdigest()[:16]
 
 
 def load_spread(

@@ -1,114 +1,144 @@
-"""Streaming corpus ingestion with dedup-store maintenance — the
-``foreachBatch`` production pattern the rest of the streaming surface was
-missing: documents arrive as a file stream (Kafka/Kinesis in production),
-and each micro-batch UPSERTS the exact-dedup fingerprint store so
-duplicates are dropped AT INGESTION, not in a nightly batch.
+"""Streaming ingestion: the declared queries that replay a corpus table
+as a file stream and maintain a store per micro-batch — the
+``foreachBatch`` production pattern (a file stream here, Kafka/Kinesis in
+production): exact, near-dup and semantic dedup at ingest, the ingest
+funnel and PII scrub, watermark-eviction timing for four stateful operator
+classes, PQ encoding, and store deletes, compaction and time travel.
+
+Every query runs the same skeleton and keeps only its staging frames, its
+batch function, its post-run check, its oracle and its query body:
+
+- ``state_dirs(family, sf_dir, table, *names)`` names its directories,
+  ``<INGEST_ROOT>/<family>-<sf>-<fp>/<name>``: ``<sf>`` is the sf_dir
+  basename and ``<fp>`` the ``catalog.table_fingerprint`` of the table the
+  family replays, so a regenerated table gets fresh arrivals, store and
+  checkpoint. Streams that share arrivals share a family (funnel and PII;
+  the four eviction-timing streams);
+- a stager writes the arrivals once per table version through
+  ``_stage_single_file_batches``: micro-batch i's rows as ONE parquet
+  file, mtimes strictly ascending, built under ``<arrivals>.build.<pid>``
+  and published by rename — so file i IS micro-batch i (the exact
+  ingester's ``stage_documents_stream`` range split is the one stager
+  whose batch boundaries no oracle states);
+- ``replay`` runs the one AvailableNow file replay, one file per trigger,
+  into the batch function (or into the sink ``write_batch`` behind a
+  stateful ``transform``);
+- where an oracle's batch arithmetic depends on the file-to-batch mapping,
+  ``_assert_batches`` fails loudly if any stored row landed in another
+  micro-batch.
 
 Exactly-once contract (the part worth copying):
 
 - the store is parquet partitioned by ``batch_id=N`` directories;
-- batch N anti-joins its (fp, doc_id) winners against partitions
-  ``batch_id < N`` ONLY, then overwrites its own partition — a retried
-  micro-batch rewrites exactly its own output (deterministic), never
-  double-inserts, and crucially never anti-joins against its own partial
-  output (which would erase its rows on retry);
+- batch N reads only partitions ``batch_id < N`` (``store_before``), then
+  overwrites its own partition (``write_batch``) — a retried micro-batch
+  rewrites exactly its own output (deterministic), never double-inserts,
+  and never anti-joins against its own partial output (which would erase
+  its rows on retry);
 - store reads never conflict with the write because each batch writes its
   own subdirectory, not the root.
 
-At 100 TB the store is the same 16-byte-per-doc artifact
-``dedup_incremental`` maintains (operators/dedup.py) — this module is its
-streaming writer. The fingerprint SET the store converges to is
-independent of micro-batch boundaries, which is what the driver oracle
-checks; per-duplicate winner resolution within one batch is min(doc_id),
-across batches it is first-arrival (test-asserted with controlled
-batches).
+Re-running a query against an unchanged table is a replay no-op: the
+checkpoint remembers the processed files and the store has converged.
 """
 
 from __future__ import annotations
 
-import hashlib
+import glob
 import os
+import re
 import shutil
+import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_table
+from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerprint
 
 INGEST_ROOT = "/tmp/spark_graft_ingest"
 N_STAGE_FILES = 4
+#: a state root under a superseded fingerprint is GC'd only once untouched
+#: this long, so a concurrently running session is never pulled out from
+#: under
+_STALE_AGE_S = 7200
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Path + (mtime_ns, size) hash of documents.parquet — a corpus
-    regenerated in place gets a fresh staging/store/checkpoint trio."""
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:16]
-
-
-def _prune_stale_tags(prefix: str, keep_tag: str, min_age_s: float = 7200) -> None:
-    """GC: remove sibling state dirs for the SAME corpus basename but a
-    DIFFERENT content fingerprint — a regenerated corpus leaves the old
-    tag's staging/store/checkpoint unreachable forever otherwise. Only
-    dirs untouched for ``min_age_s`` are removed so a concurrently
-    running session (round-3 ADVICE raised exactly this race class) is
-    never pulled out from under."""
-    import time
-
-    if not os.path.isdir(INGEST_ROOT):
-        return
-    for d in os.listdir(INGEST_ROOT):
-        if not d.startswith(prefix + "-") or d == keep_tag:
-            continue
-        path = os.path.join(INGEST_ROOT, d)
-        try:
-            if time.time() - os.stat(path).st_mtime > min_age_s:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            pass
-
-
-def ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(staging, store, checkpoint) directories for this corpus version."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
+def state_dirs(family: str, sf_dir: str, table: str, *names: str) -> tuple[str, ...]:
+    """``<INGEST_ROOT>/<family>-<sf>-<fp>/<name>`` for each of ``names``:
+    one root per ingest family and version of ``table`` (``<fp>`` is its
+    ``table_fingerprint``). A regenerated table would leave its old root
+    unreachable forever, so roots of the SAME family and sf under another
+    fingerprint are removed once untouched for ``_STALE_AGE_S``; roots of
+    other families or other sfs are never touched. ``INGEST_ROOT`` is read
+    at call time, so a caller may repoint it."""
+    prefix = f"{family}-{os.path.basename(os.path.normpath(sf_dir))}-"
+    tag = prefix + table_fingerprint(sf_dir, table)
+    stale = re.compile(re.escape(prefix) + "[0-9a-f]{16}")
+    if os.path.isdir(INGEST_ROOT):
+        for d in os.listdir(INGEST_ROOT):
+            if d == tag or not stale.fullmatch(d):
+                continue
+            path = os.path.join(INGEST_ROOT, d)
+            try:
+                if time.time() - os.stat(path).st_mtime > _STALE_AGE_S:
+                    shutil.rmtree(path, ignore_errors=True)
+            except OSError:
+                pass
     root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
+    return tuple(os.path.join(root, n) for n in names)
+
+
+def replay(
+    spark: SparkSession,
+    arrivals: str,
+    checkpoint: str,
+    batch_fn: Callable[[DataFrame, int], None],
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """Replay the staged ``arrivals`` as a parquet file stream, one file
+    per micro-batch, under Trigger.AvailableNow, into
+    ``batch_fn(batch_df, batch_id)``; ``transform`` first maps the raw
+    stream (a stateful operator, emitting in append mode). The checkpoint
+    remembers processed files, so a re-run over an unchanged table is a
+    no-op. The trailing no-data batch is never skipped: it carries the
+    final watermark advance.
+
+    ``spark.sql.shuffle.partitions`` is scoped to 8 for the stream's
+    duration, as ``sources.run_available_now`` does: a stateful stream
+    locks one state store per shuffle partition in at query start, pure
+    overhead on replay-sized input (results are partitioning-independent).
+    """
+    stream = (
+        spark.readStream.schema(spark.read.parquet(arrivals).schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(arrivals)
     )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        if transform is not None:
+            stream = transform(stream)
+        q = (
+            stream.writeStream.foreachBatch(batch_fn)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Split the static documents table into N_STAGE_FILES range-partitioned
-    parquet files so the file source genuinely replays multiple
-    micro-batches (idempotent per corpus version)."""
-    arrivals, _, _ = ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        tmp = f"{arrivals}.build.{os.getpid()}"
-        docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, arrivals)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+def write_batch(df: DataFrame, batch_id: int, store_dir: str) -> None:
+    """Overwrite the store partition ``batch_id=N`` with ``df`` — the one
+    write of the exactly-once layout, and on its own the whole sink of the
+    eviction-timing streams (each batch's emitted rows)."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(store_dir, f"batch_id={batch_id}")
+    )
 
 
 def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFrame | None:
@@ -126,6 +156,81 @@ def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFram
     return spark.read.option("basePath", store_dir).parquet(*parts)
 
 
+def _stage_single_file_batches(
+    arrivals: str, make_batches: Callable[[], list[DataFrame]]
+) -> str:
+    """Stage the frames of ``make_batches()`` as the arrivals of one
+    replay: frame i becomes ONE parquet file ``batch-i.parquet`` with
+    strictly increasing mtimes AND sorted names, so the file source's
+    (mtime, path) ordering replays them as micro-batches 0..N-1
+    deterministically. Built under ``<arrivals>.build.<pid>`` and
+    published by rename, so a concurrent session never sees a half-staged
+    directory. Idempotent: with the ``_staged`` marker present,
+    ``make_batches`` (and any eager job or guard in it) never runs."""
+    marker = os.path.join(arrivals, "_staged")
+    if os.path.exists(marker):
+        return arrivals
+    batches = make_batches()
+    tmp = f"{arrivals}.build.{os.getpid()}"
+    os.makedirs(tmp, exist_ok=True)
+    for i, b in enumerate(batches):
+        part_dir = os.path.join(tmp, f"part{i}")
+        b.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
+        dst = os.path.join(tmp, f"batch-{i}.parquet")
+        os.rename(src, dst)
+        shutil.rmtree(part_dir, ignore_errors=True)
+        t = time.time() + i
+        os.utime(dst, (t, t))
+    try:
+        os.rename(tmp, arrivals)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+    with open(marker, "w") as f:
+        f.write("ok")
+    return arrivals
+
+
+def _assert_batches(
+    spark: SparkSession, store: str, expected: Column, what: str
+) -> None:
+    """Fail loudly unless every stored row's ``batch_id`` equals
+    ``expected`` (rows where it is NULL are exempt): the oracles' batch
+    arithmetic assumes staged file i is micro-batch i, so a file source
+    that ever reorders arrivals must not pass silently."""
+    bad = (
+        spark.read.parquet(store)
+        .filter(expected != F.col("batch_id").cast("int"))
+        .count()
+    )
+    if bad:
+        raise RuntimeError(
+            f"{what}: {bad} rows landed in the wrong micro-batch"
+        )
+
+
+def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
+    """Split the static documents table into N_STAGE_FILES range-partitioned
+    parquet files so the file source genuinely replays multiple
+    micro-batches (idempotent per corpus version). The exact ingester and
+    ``stream_doc_quality_scores`` replay these arrivals."""
+    (arrivals,) = state_dirs("docs", sf_dir, "documents", "arrivals")
+    marker = os.path.join(arrivals, "_staged")
+    if not os.path.exists(marker):
+        docs = load_table(spark, sf_dir, "documents")
+        tmp = f"{arrivals}.build.{os.getpid()}"
+        docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        try:
+            os.rename(tmp, arrivals)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+        with open(marker, "w") as f:
+            f.write("ok")
+    return arrivals
+
+
 def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     """foreachBatch body: in-batch winners (min doc_id per fingerprint),
     anti-join against the prior store, overwrite ONLY this batch's
@@ -139,34 +244,17 @@ def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     prior = store_before(spark, store_dir, batch_id)
     if prior is not None:
         winners = winners.join(prior.select("fp"), "fp", "left_anti")
-    winners.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_batch(winners, batch_id, store_dir)
 
 
 def run_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the corpus through the streaming dedup ingester (AvailableNow,
-    one staged file per micro-batch) and return the store directory.
-    Re-running against an unchanged corpus is a no-op: the checkpoint
-    remembers processed files and the store is already converged."""
-    arrivals, store, checkpoint = ingest_dirs(sf_dir)
-    stage_documents_stream(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the corpus through the streaming dedup ingester (one
+    range-staged file per micro-batch) and return the store directory."""
+    store, checkpoint = state_dirs(
+        "docs", sf_dir, "documents", "store", "checkpoint"
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    arrivals = stage_documents_stream(spark, sf_dir)
+    replay(spark, arrivals, checkpoint, lambda df, bid: upsert_batch(df, bid, store))
     return store
 
 
@@ -205,56 +293,19 @@ def stream_dedup_ingest_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_N_BATCHES = 4
 
 
-def near_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str, str]:
-    """(arrivals, store, checkpoint, survivors, stop-artifact) dirs for the
-    near-dup ingester — separate trio from the exact ingester's."""
-    base = f"near-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-        os.path.join(root, "survivors"),
-        os.path.join(root, "stop_fps"),
-    )
+def stage_mod_batches(
+    spark: SparkSession, sf_dir: str, arrivals: str, n: int
+) -> str:
+    """Stage the documents as ``n`` single-file arrivals where file i
+    holds doc_id % n == i, so micro-batch i IS modulus class i and every
+    per-batch number is a pure function of the data — the property the
+    oracles' batch arithmetic states."""
 
+    def batches() -> list[DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        return [docs.filter(F.col("doc_id") % n == i) for i in range(n)]
 
-def stage_mod_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the corpus as NEAR_N_BATCHES single-file arrivals where file i
-    holds doc_id % N == i, with strictly increasing mtimes AND sorted
-    names, so the file source's (mtime, path) ordering replays them as
-    micro-batches 0..N-1 deterministically — the property the driver
-    oracle's batch arithmetic states."""
-    import glob
-    import time
-
-    arrivals, _, _, _, _ = near_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    docs = load_table(spark, sf_dir, "documents")
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for i in range(NEAR_N_BATCHES):
-        part_dir = os.path.join(tmp, f"part{i}")
-        docs.filter(F.col("doc_id") % NEAR_N_BATCHES == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i  # strictly increasing, 1s apart
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
+    return _stage_single_file_batches(arrivals, batches)
 
 
 def upsert_near_batch(
@@ -291,12 +342,8 @@ def upsert_near_batch(
         )
     # the store records EVERY arrival's postings (seen-content semantics:
     # novelty is judged against all content seen earlier, kept or not)
-    postings.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_batch(postings, batch_id, store_dir)
+    write_batch(survivors, batch_id, out_dir)
 
 
 def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
@@ -311,41 +358,24 @@ def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
         winnow_md5_postings,
     )
 
-    arrivals, store, checkpoint, survivors, stop_dir = near_ingest_dirs(sf_dir)
-    stage_mod_batches(spark, sf_dir)
+    arrivals, store, checkpoint, survivors, stop_dir = state_dirs(
+        "near", sf_dir, "documents",
+        "arrivals", "store", "checkpoint", "survivors", "stop_fps",
+    )
+    stage_mod_batches(spark, sf_dir, arrivals, NEAR_N_BATCHES)
     if not os.path.isdir(stop_dir):
         docs = load_table(spark, sf_dir, "documents")
         stop_fps(winnow_md5_postings(docs)).write.mode("overwrite").parquet(
             f"{stop_dir}.build"
         )
         os.rename(f"{stop_dir}.build", stop_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: upsert_near_batch(df, bid, store, survivors, stop_dir),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_near_batch(df, bid, store, survivors, stop_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _assert_batches(
+        spark, store, F.col("doc_id") % NEAR_N_BATCHES, "near-dup ingest"
     )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
-    bad = (
-        spark.read.parquet(store)
-        .filter(F.col("doc_id") % NEAR_N_BATCHES != F.col("batch_id"))
-        .count()
-    )
-    if bad:
-        raise RuntimeError(
-            f"near-dup ingest: {bad} postings landed in the wrong micro-batch"
-        )
     return survivors
 
 
@@ -433,49 +463,6 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_N_BATCHES = 4
 
 
-def funnel_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, stats, checkpoint) for the funnel ingester —
-    separate trio so the range-staged exact ingester is untouched."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "funnel_arrivals"),
-        os.path.join(root, "funnel_store"),
-        os.path.join(root, "funnel_stats"),
-        os.path.join(root, "funnel_checkpoint"),
-    )
-
-
-def stage_modulus_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the corpus as FUNNEL_N_BATCHES single-file parquet slices,
-    slice k = docs with ``doc_id % FUNNEL_N_BATCHES == k``, file mtimes
-    strictly ascending in k — the file source processes one file per
-    trigger in (mtime, path) order, so micro-batch k IS modulus class k
-    and every per-batch number becomes oracle-expressible."""
-    arrivals, _, _, _ = funnel_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        os.makedirs(arrivals, exist_ok=True)
-        import time
-
-        t0 = time.time() - 3600
-        for k in range(FUNNEL_N_BATCHES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
-            docs.filter(
-                F.col("doc_id") % FUNNEL_N_BATCHES == k
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
-
-
 def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
     """foreachBatch body: compute the batch's funnel counters, upsert the
     fingerprint store (same exactly-once layout as ``upsert_batch``:
@@ -505,9 +492,7 @@ def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> 
         if prior is not None
         else winners
     )
-    new.write.mode("overwrite").parquet(
-        os.path.join(store, f"batch_id={batch_id}")
-    )
+    write_batch(new, batch_id, store)
     row = flagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_arrivals"),
         F.sum("gate").cast("bigint").alias("n_gate_passed"),
@@ -516,35 +501,21 @@ def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> 
         spark.read.parquet(os.path.join(store, f"batch_id={batch_id}"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_new_docs"))
     )
-    row.write.mode("overwrite").parquet(
-        os.path.join(stats, f"batch_id={batch_id}")
-    )
+    write_batch(row, batch_id, stats)
 
 
 def run_funnel_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the modulus-staged corpus through the
-    funnel ingester; returns the stats directory. Idempotent per corpus
-    version (checkpointed file progress + per-partition overwrites)."""
-    arrivals, store, stats, checkpoint = funnel_dirs(sf_dir)
-    stage_modulus_stream(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(arrivals, "slice_0.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the modulus-staged corpus through the funnel ingester;
+    returns the stats directory."""
+    arrivals, store, stats, checkpoint = state_dirs(
+        "funnel", sf_dir, "documents",
+        "arrivals", "funnel_store", "funnel_stats", "funnel_checkpoint",
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: funnel_batch(df, bid, store, stats)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stage_mod_batches(spark, sf_dir, arrivals, FUNNEL_N_BATCHES)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: funnel_batch(df, bid, store, stats),
     )
-    q.awaitTermination()
     return stats
 
 
@@ -621,20 +592,6 @@ def stream_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def pii_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, stats, checkpoint) for the scrub ingester —
-    arrivals are SHARED with the funnel (same staged slices, separate
-    checkpoint tracks this stream's own progress)."""
-    arrivals, _, _, _ = funnel_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "pii_store"),
-        os.path.join(root, "pii_stats"),
-        os.path.join(root, "pii_checkpoint"),
-    )
-
-
 def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
     """foreachBatch body: scrub the batch with the shared PII kernel,
     write scrubbed docs (own partition, overwrite), then the stats row."""
@@ -650,45 +607,29 @@ def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) 
         "n_ids",
         F.md5(F.regexp_replace("t2", PII_IDNUM, "[ID]")).alias("scrubbed_md5"),
     ).localCheckpoint(eager=True)  # consumed by the store write + stats agg
-    counted.write.mode("overwrite").parquet(
-        os.path.join(store, f"batch_id={batch_id}")
-    )
+    write_batch(counted, batch_id, store)
     row = counted.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_emails").cast("bigint").alias("n_emails"),
         F.sum("n_phones").cast("bigint").alias("n_phones"),
         F.sum("n_ids").cast("bigint").alias("n_ids"),
     )
-    row.write.mode("overwrite").parquet(
-        os.path.join(stats, f"batch_id={batch_id}")
-    )
+    write_batch(row, batch_id, stats)
 
 
 def run_pii_scrub_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the modulus-staged corpus through the
-    scrubbing ingester; returns the stats directory. Idempotent per
-    corpus version (checkpointed file progress + per-partition
-    overwrites)."""
-    arrivals, store, stats, checkpoint = pii_ingest_dirs(sf_dir)
-    stage_modulus_stream(spark, sf_dir)
-    schema = spark.read.parquet(
-        os.path.join(arrivals, "slice_0.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the modulus-staged corpus through the scrubbing ingester;
+    returns the stats directory. The arrivals are the funnel's (same
+    family root); this stream's own checkpoint tracks its progress."""
+    arrivals, store, stats, checkpoint = state_dirs(
+        "funnel", sf_dir, "documents",
+        "arrivals", "pii_store", "pii_stats", "pii_checkpoint",
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: pii_scrub_batch(df, bid, store, stats)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stage_mod_batches(spark, sf_dir, arrivals, FUNNEL_N_BATCHES)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: pii_scrub_batch(df, bid, store, stats),
     )
-    q.awaitTermination()
     return stats
 
 
@@ -761,108 +702,55 @@ SESSION_WM_US = 1800 * 1000000  # 30-min watermark delay
 # (proof in the query docstring; violated only if delay < gap).
 
 
-def _events_fingerprint(sf_dir: str) -> str:
-    """events.parquet content fingerprint (path + mtime/size), same
-    staleness contract as _corpus_fingerprint / stage_events_dir."""
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:16]
-
-
-def session_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the eviction-timing replay."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    tag = f"{base}-{_events_fingerprint(sf_dir)}"
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "session_arrivals"),
-        os.path.join(root, "session_store"),
-        os.path.join(root, "session_checkpoint"),
+def _time_sliced(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """events with ``slice`` = (unix_micros(ts) - min) * k div
+    (max - min + 1): k event-time ranges in integer arithmetic,
+    engine-exact, so the oracles restate the slice map."""
+    ev = load_table(spark, sf_dir, "events")
+    mn, mx = ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).first()
+    return ev.withColumn(
+        "slice", F.expr(f"(unix_micros(ts) - {mn}) * {k} div {mx - mn + 1}")
     )
 
 
-def stage_time_slices(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as SESSION_N_SLICES single-file parquet slices in
-    EVENT-TIME order: slice k = events with
-    ``(unix_micros(ts) - min) * K div (max - min + 1) == k`` (integer
-    arithmetic, engine-exact), file mtimes ascending in k — so
-    micro-batch k IS time-range k and the per-batch watermark becomes a
-    pure function of the slice maxima."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events")
-        mn, mx = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        span = mx - mn + 1
-        os.makedirs(arrivals, exist_ok=True)
-        import time
+def stage_time_slices(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
+    """Stage events as SESSION_N_SLICES single-file slices in EVENT-TIME
+    order, so micro-batch k IS time-range k and the per-batch watermark
+    becomes a pure function of the slice maxima."""
 
-        t0 = time.time() - 3600
-        for k in range(SESSION_N_SLICES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
-            ev.filter(
-                F.expr(
-                    f"(unix_micros(ts) - {mn}) * {SESSION_N_SLICES}"
-                    f" div {span}"
-                )
-                == k
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+    def batches() -> list[DataFrame]:
+        sliced = _time_sliced(spark, sf_dir, SESSION_N_SLICES)
+        return [
+            sliced.filter(F.col("slice") == k).drop("slice")
+            for k in range(SESSION_N_SLICES)
+        ]
+
+    return _stage_single_file_batches(arrivals, batches)
 
 
-def run_session_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through an
-    append-mode session_window aggregation (30-min gap, 30-min
-    watermark); each batch's EMITTED sessions land in the store
-    partition ``batch_id=N`` (exactly-once: a retried batch overwrites
-    its own partition). The trailing no-data batch is NOT skipped — it
-    carries the final watermark advance and flushes the last decided
-    sessions."""
-    from airflow_ml_pipeline_spark.streaming.windows import session_aggregate
-
-    arrivals, store, checkpoint = session_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+def _run_timing(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    transform: Callable[[DataFrame], DataFrame],
+    stage: Callable[[SparkSession, str, str], str] = stage_time_slices,
+    arrivals_name: str = "arrivals",
+) -> str:
+    """Replay time-ordered event slices through the stateful ``transform``
+    in append mode; each batch's EMITTED rows land in the partition
+    ``batch_id=N`` of ``<name>_store``, which is returned. The trailing
+    no-data batch carries the final watermark advance and flushes the last
+    decided rows. The session, tumbling and custom-state streams share
+    the ``stage_time_slices`` arrivals, each with its own checkpoint."""
+    arrivals, store, checkpoint = state_dirs(
+        "timing", sf_dir, "events",
+        arrivals_name, f"{name}_store", f"{name}_checkpoint",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        agg = session_aggregate(stream, "30 minutes", "30 minutes")
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    stage(spark, sf_dir, arrivals)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: write_batch(df, bid, store), transform,
+    )
     return store
 
 
@@ -962,7 +850,12 @@ def stream_session_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFram
     the one-time replay cost is the first call's (~9 s at sf0.1,
     dominated by per-micro-batch state-store commits, constant in
     corpus size at fixed slice count)."""
-    store = run_session_timing(spark, sf_dir)
+    from airflow_ml_pipeline_spark.streaming.windows import session_aggregate
+
+    store = _run_timing(
+        spark, sf_dir, "session",
+        lambda s: session_aggregate(s, "30 minutes", "30 minutes"),
+    )
     return (
         spark.read.option("basePath", store)
         .parquet(store)
@@ -974,58 +867,6 @@ def stream_session_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("batch_id").cast("bigint").alias("emitted_batch"),
         )
     )
-
-
-def tumbling_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the tumbling-window eviction
-    replay — arrivals SHARED with the session-timing stream (same
-    time-ordered slices; separate checkpoint tracks this stream's own
-    progress, the funnel/pii-arrivals pattern)."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "tumbling_store"),
-        os.path.join(root, "tumbling_checkpoint"),
-    )
-
-
-def run_tumbling_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through an
-    append-mode 1-hour tumbling aggregation (30-min watermark); each
-    batch's EMITTED windows land in ``batch_id=N`` store partitions.
-    The trailing no-data batch is NOT skipped (it flushes the windows
-    the final watermark advance decides)."""
-    from airflow_ml_pipeline_spark.streaming.windows import tumbling_counts
-
-    arrivals, store, checkpoint = tumbling_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        agg = tumbling_counts(stream, window="1 hour", watermark="30 minutes")
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
 
 
 def _tumbling_timing_oracle() -> str:
@@ -1088,7 +929,12 @@ def stream_tumbling_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFra
     TIMING column is streaming-specific. Arrivals are shared with the
     session stream; this query's own checkpoint/store keep exactly-once
     per-partition semantics."""
-    store = run_tumbling_timing(spark, sf_dir)
+    from airflow_ml_pipeline_spark.streaming.windows import tumbling_counts
+
+    store = _run_timing(
+        spark, sf_dir, "tumbling",
+        lambda s: tumbling_counts(s, window="1 hour", watermark="30 minutes"),
+    )
     return (
         spark.read.option("basePath", store)
         .parquet(store)
@@ -1100,57 +946,6 @@ def stream_tumbling_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("batch_id").cast("bigint").alias("emitted_batch"),
         )
     )
-
-
-def stateful_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the custom-state eviction replay
-    — arrivals SHARED with the session/tumbling timing streams."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        arrivals,
-        os.path.join(root, "stateful_store"),
-        os.path.join(root, "stateful_checkpoint"),
-    )
-
-
-def run_stateful_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the time-sliced events through the
-    applyInPandasWithState gap sessionizer (EventTimeTimeout); each
-    batch's EMITTED sessions land in ``batch_id=N`` store partitions.
-    The trailing no-data batch is NOT skipped — it carries the final
-    watermark advance, and the last decided sessions fire as TIMEOUTS
-    there (the timer path, not the data path)."""
-    from airflow_ml_pipeline_spark.streaming.stateful import gap_sessions
-
-    arrivals, store, checkpoint = stateful_timing_dirs(sf_dir)
-    stage_time_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        sess = gap_sessions(stream)
-        q = (
-            sess.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
 
 
 def _stateful_timing_oracle() -> str:
@@ -1259,7 +1054,9 @@ def stream_stateful_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFra
     lattice as a state STRING, so cross-engine equality survives any
     batch slicing. Store/bench convention as the rest of the timing
     family (idempotent per-corpus store; first call pays the replay)."""
-    store = run_stateful_timing(spark, sf_dir)
+    from airflow_ml_pipeline_spark.streaming.stateful import gap_sessions
+
+    store = _run_timing(spark, sf_dir, "stateful", gap_sessions)
     return (
         spark.read.option("basePath", store)
         .parquet(store)
@@ -1285,46 +1082,19 @@ DEDUP_WM_MS = 36 * 3600 * 1000  # 36-hour dedup horizon (vs 7.5-day slices)
 DEDUP_WM_US = DEDUP_WM_MS * 1000
 
 
-def dedup_timing_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the dedup-eviction replay.
-    Arrivals are NOT shared with the session slices: the dedup operator's
-    within-batch winner among same-key rows follows Spark's partition
-    processing order (genuinely nondeterministic), so the fixture stages
-    its own slices pre-reduced to one row per (key, slice)."""
-    arrivals, _, _ = session_timing_dirs(sf_dir)
-    root = os.path.dirname(arrivals)
-    return (
-        os.path.join(root, "dedup_timing_arrivals"),
-        os.path.join(root, "dedup_timing_store"),
-        os.path.join(root, "dedup_timing_checkpoint"),
-    )
-
-
-def stage_dedup_slices(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as DEDUP_N_SLICES single-file parquet slices in
-    EVENT-TIME order (slice k = integer time-range k, the
-    stage_time_slices arithmetic), REDUCED to the min-(ts, event_id) row
-    per (user_id, event_type, slice). The reduction is what makes the
-    replay deterministic: dropDuplicatesWithinWatermark keeps the
+def stage_dedup_slices(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
+    """Stage events as DEDUP_N_SLICES single-file slices in EVENT-TIME
+    order (the ``_time_sliced`` arithmetic), REDUCED to the min-(ts,
+    event_id) row per (user_id, event_type, slice). The reduction is what
+    makes the replay deterministic: dropDuplicatesWithinWatermark keeps the
     first-PROCESSED row of a key within a micro-batch (partition order —
     not restatable), so the fixture guarantees each key arrives at most
-    once per batch and every emission's ts is pinned."""
-    arrivals, _, _ = dedup_timing_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        from pyspark.sql import Window
+    once per batch and every emission's ts is pinned. These arrivals are
+    not the session slices for the same reason."""
+    from pyspark.sql import Window
 
-        ev = load_table(spark, sf_dir, "events")
-        mn, mx = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
-        span = mx - mn + 1
-        sliced = ev.withColumn(
-            "slice",
-            F.expr(
-                f"(unix_micros(ts) - {mn}) * {DEDUP_N_SLICES} div {span}"
-            ),
-        )
+    def batches() -> list[DataFrame]:
+        sliced = _time_sliced(spark, sf_dir, DEDUP_N_SLICES)
         w = Window.partitionBy("user_id", "event_type", "slice").orderBy(
             "ts", "event_id"
         )
@@ -1333,12 +1103,8 @@ def stage_dedup_slices(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.col("rn") == 1)
             .select("user_id", "event_type", "event_id", "ts", "slice")
         )
-        os.makedirs(arrivals, exist_ok=True)
-        import time
-
-        t0 = time.time() - 3600
+        parts = []
         for k in range(DEDUP_N_SLICES):
-            tmp = os.path.join(arrivals, f".build_{k}.{os.getpid()}")
             part_df = staged.filter(F.col("slice") == k).drop("slice")
             if part_df.limit(1).count() == 0:
                 # batch numbering = slice numbering requires every slice
@@ -1347,54 +1113,10 @@ def stage_dedup_slices(spark: SparkSession, sf_dir: str) -> str:
                     f"dedup-timing slice {k} of {DEDUP_N_SLICES} is empty "
                     f"for {sf_dir} — oracle batch mapping would shift"
                 )
-            part_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            dst = os.path.join(arrivals, f"slice_{k}.parquet")
-            os.rename(os.path.join(tmp, part), dst)
-            os.utime(dst, (t0 + k, t0 + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+            parts.append(part_df)
+        return parts
 
-
-def run_dedup_timing(spark: SparkSession, sf_dir: str) -> str:
-    """AvailableNow replay of the staged per-key-slice arrivals through
-    ``dropDuplicatesWithinWatermark(["user_id", "event_type"])`` with a
-    36-hour watermark; each batch's EMITTED (first-seen or re-admitted)
-    rows land in ``batch_id=N`` store partitions. The trailing no-data
-    batch is kept for uniformity with the timing family — dedup emits
-    only on arrival, so it writes an empty partition."""
-    arrivals, store, checkpoint = dedup_timing_dirs(sf_dir)
-    stage_dedup_slices(spark, sf_dir)
-    schema = spark.read.parquet(os.path.join(arrivals, "slice_0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        deduped = stream.withWatermark(
-            "ts", "36 hours"
-        ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        q = (
-            deduped.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    os.path.join(store, f"batch_id={bid}")
-                )
-            )
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return store
+    return _stage_single_file_batches(arrivals, batches)
 
 
 def _dedup_timing_oracle() -> str:
@@ -1498,7 +1220,14 @@ def stream_dedup_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the horizon, GC'd by the watermark; nothing here grows with
     corpus size beyond live-key cardinality. Store/bench convention as
     the rest of the timing family (idempotent per-corpus store)."""
-    store = run_dedup_timing(spark, sf_dir)
+    store = _run_timing(
+        spark, sf_dir, "dedup",
+        lambda s: s.withWatermark("ts", "36 hours").dropDuplicatesWithinWatermark(
+            ["user_id", "event_type"]
+        ),
+        stage=stage_dedup_slices,
+        arrivals_name="dedup_arrivals",
+    )
     return (
         spark.read.option("basePath", store)
         .parquet(store)
@@ -1526,57 +1255,21 @@ def stream_dedup_eviction_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEM_N_BATCHES = 4
 
 
-def sem_ingest_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    """(arrivals, store, checkpoint, survivors) for the semantic-dedup
-    ingester. Tagged by the EMBEDDINGS corpus fingerprint (this family
-    streams vectors, not documents)."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    base = f"sem-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-        os.path.join(root, "survivors"),
-    )
+def _range_batch(n_total: int, n: int) -> Column:
+    """Micro-batch of a vector under RANGE staging: vec_id * n // n_total."""
+    return (F.col("vec_id") * n / F.lit(n_total)).cast("int")
 
 
-def stage_range_vec_batches(
-    spark: SparkSession, sf_dir: str, arrivals: str | None = None
-) -> str:
-    """Stage the embeddings as SEM_N_BATCHES single-file arrivals where
-    file i holds ``vec_id * N // n_total == i`` (contiguous vec_id
-    RANGES, mtimes strictly ascending, names sorted) — RANGE staging,
-    not the modulus staging of the near-dup ingester, deliberately:
-    earlier batch then implies LOWER vec_id, which makes the streaming
-    suppressed-set EQUAL the batch twin's keep-priority rule
-    (nn_id < vec_id) exactly — the metamorphic convergence pin
-    tests/test_stream_semantic.py asserts. ``arrivals`` overrides the
-    destination (the PQ encode ingester stages the same ranges under
-    its own root)."""
-    import glob
-    import time
+def _dense_vec_ids(emb: DataFrame, what: str) -> int:
+    """Row count of ``emb``, after checking its vec_ids are dense 0..n-1.
 
-    if arrivals is None:
-        arrivals, _, _, _ = sem_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    emb = load_table(spark, sf_dir, "embeddings")
+    Completeness guard (ADVICE r13): batch index = vec_id * N // n_total
+    lands in [0, N) iff vec_id is in [0, n_total) — a non-dense corpus
+    with any vec_id outside that range would silently stage NOTHING for
+    that vector and only surface later as an oracle mismatch, so fail
+    loudly at staging time instead. NULL vec_ids are the same silent-drop
+    class (both range predicates evaluate to NULL), hence the isNull arm."""
     n_total = emb.count()
-    # Completeness guard (ADVICE r13): batch index = vec_id * N // n_total
-    # lands in [0, N) iff vec_id is in [0, n_total) — a non-dense corpus
-    # with any vec_id outside that range would silently stage NOTHING for
-    # that vector and only surface later as an oracle mismatch. Fail
-    # loudly at staging time instead. NULL vec_ids are the same silent-
-    # drop class (both range predicates evaluate to NULL, and the batch
-    # expression maps them to no file) — the isNull arm catches them
-    # (r14 review finding).
     oob = emb.filter(
         F.col("vec_id").isNull()
         | (F.col("vec_id") < 0)
@@ -1584,30 +1277,29 @@ def stage_range_vec_batches(
     ).count()
     if oob:
         raise RuntimeError(
-            f"semantic ingest staging: {oob} vec_ids outside [0, {n_total})"
+            f"{what} staging: {oob} vec_ids outside [0, {n_total})"
             " — range staging requires dense 0..n-1 vec_ids"
         )
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for i in range(SEM_N_BATCHES):
-        part_dir = os.path.join(tmp, f"part{i}")
-        emb.filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            == i
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i  # strictly increasing, 1s apart
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
+    return n_total
+
+
+def stage_range_vec_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
+    """Stage the embeddings as SEM_N_BATCHES single-file arrivals where
+    file i holds ``vec_id * N // n_total == i`` (contiguous vec_id
+    RANGES) — RANGE staging, not the modulus staging of the near-dup
+    ingester, deliberately: earlier batch then implies LOWER vec_id, which
+    makes the streaming suppressed-set EQUAL the batch twin's
+    keep-priority rule (nn_id < vec_id) exactly — the metamorphic
+    convergence pin tests/test_stream_semantic.py asserts. The semantic
+    dedup and PQ encode ingesters each stage these ranges under their own
+    root."""
+
+    def batches() -> list[DataFrame]:
+        emb = load_table(spark, sf_dir, "embeddings")
+        b = _range_batch(_dense_vec_ids(emb, "semantic ingest"), SEM_N_BATCHES)
+        return [emb.filter(b == i) for i in range(SEM_N_BATCHES)]
+
+    return _stage_single_file_batches(arrivals, batches)
 
 
 def upsert_sem_batch(
@@ -1664,52 +1356,25 @@ def upsert_sem_batch(
     survivors = b.select("vec_id", "label", "bucket").join(
         dropped, "vec_id", "left_anti"
     )
-    b.select("vec_id", "bucket", "embedding", "nrm").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-    survivors.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"batch_id={batch_id}")
-    )
+    write_batch(b.select("vec_id", "bucket", "embedding", "nrm"), batch_id, store_dir)
+    write_batch(survivors, batch_id, out_dir)
 
 
 def run_sem_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the embeddings corpus through the streaming semantic-dedup
-    ingester (AvailableNow, one staged file per micro-batch) and return
-    the survivors directory. Idempotent per corpus version."""
-    arrivals, store, checkpoint, survivors = sem_ingest_dirs(sf_dir)
-    stage_range_vec_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    ingester and return the survivors directory."""
+    arrivals, store, checkpoint, survivors = state_dirs(
+        "sem", sf_dir, "embeddings", "arrivals", "store", "checkpoint", "survivors"
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_sem_batch(df, bid, store, survivors)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stage_range_vec_batches(spark, sf_dir, arrivals)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: upsert_sem_batch(df, bid, store, survivors),
     )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            != F.col("batch_id")
-        )
-        .count()
+    _assert_batches(
+        spark, store, _range_batch(n_total, SEM_N_BATCHES), "semantic ingest"
     )
-    if bad:
-        raise RuntimeError(
-            f"semantic ingest: {bad} vectors landed in the wrong micro-batch"
-        )
     return survivors
 
 
@@ -1809,29 +1474,6 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def pqe_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the PQ encode ingester. Tagged
-    by the embeddings corpus fingerprint (streams vectors, like the
-    semantic-dedup family). The arrivals are a second staging of the
-    same ranges the semantic-dedup family stages — deliberately NOT
-    shared (r14 review): each family's checkpoint records its own
-    source path, so sharing would couple their replay lifecycles for
-    the price of a few MB of one-time staging on these corpora."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
-
-    base = f"pqe-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
 def upsert_pq_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     """foreachBatch body: encode the arriving vectors against the frozen
     coarse centroids + PQ codebooks and append the index columns
@@ -1848,49 +1490,25 @@ def upsert_pq_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     coded = pq_index(batch_df).select(
         "vec_id", "label", "cluster_id", "pq_code", "vnorm"
     )
-    coded.write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_batch(coded, batch_id, store_dir)
 
 
 def run_pq_encode_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the embeddings corpus through the streaming PQ encoder
-    (AvailableNow, one staged file per micro-batch) and return the
-    coded-store directory. Idempotent per corpus version."""
-    arrivals, store, checkpoint = pqe_ingest_dirs(sf_dir)
-    stage_range_vec_batches(spark, sf_dir, arrivals=arrivals)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the embeddings corpus through the streaming PQ encoder and
+    return the coded-store directory. Its arrivals are a second staging of
+    the semantic-dedup ranges, deliberately NOT shared (r14 review): each
+    family's checkpoint records its own source path, so sharing would
+    couple their replay lifecycles for the price of a few MB of one-time
+    staging on these corpora."""
+    arrivals, store, checkpoint = state_dirs(
+        "pqe", sf_dir, "embeddings", "arrivals", "store", "checkpoint"
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: upsert_pq_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # defensive: the oracle's batch arithmetic assumes file i == batch i;
-    # fail loudly if the source ever reorders arrivals
+    stage_range_vec_batches(spark, sf_dir, arrivals)
+    replay(spark, arrivals, checkpoint, lambda df, bid: upsert_pq_batch(df, bid, store))
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("vec_id") * SEM_N_BATCHES / F.lit(n_total)).cast("int")
-            != F.col("batch_id")
-        )
-        .count()
+    _assert_batches(
+        spark, store, _range_batch(n_total, SEM_N_BATCHES), "pq encode ingest"
     )
-    if bad:
-        raise RuntimeError(
-            f"pq encode ingest: {bad} vectors landed in the wrong micro-batch"
-        )
     return store
 
 
@@ -1982,44 +1600,21 @@ DEL_ADD_BATCH = {0: 0, 1: 2, 2: 4, 3: 5}  # doc_id % 4 / vec quarter -> add batc
 #: unread)
 DEL_RULE_B1 = "doc_id % 4 = 0 AND doc_id % 3 = 0"
 DEL_RULE_B3 = "doc_id % 4 <= 1 AND doc_id % 5 = 2"
-DEL_ADD_CASE = (
-    "CASE doc_id % 4 "
-    + " ".join(f"WHEN {m} THEN {b}" for m, b in sorted(DEL_ADD_BATCH.items())[:-1])
-    + f" ELSE {DEL_ADD_BATCH[max(DEL_ADD_BATCH)]} END"
-)
 
 
-def _stage_single_file_batches(arrivals: str, batches) -> str:
-    """Write each frame in ``batches`` as ONE parquet file
-    ``batch-i.parquet`` with strictly increasing mtimes AND sorted
-    names, so the file source's (mtime, path) ordering replays them as
-    micro-batches 0..N-1 deterministically (idempotent: the ``_staged``
-    marker short-circuits). The shared staging loop of the delete
-    ingesters (r15 review: previously duplicated per stager)."""
-    import glob
-    import time
+def del_add_case(slot: str) -> str:
+    """SQL CASE (valid in both engines) mapping an add's schedule slot
+    (0..3: doc_id % 4, or a vector's range quarter) to its add batch."""
+    return (
+        f"CASE {slot} "
+        + " ".join(
+            f"WHEN {m} THEN {b}" for m, b in sorted(DEL_ADD_BATCH.items())[:-1]
+        )
+        + f" ELSE {DEL_ADD_BATCH[max(DEL_ADD_BATCH)]} END"
+    )
 
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(tmp, f"part{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = time.time() + i
-        os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return arrivals
+
+DEL_ADD_CASE = del_add_case("doc_id % 4")
 
 
 def _latest_events(store_df: DataFrame, key: str, payload: list[str]) -> DataFrame:
@@ -2055,21 +1650,7 @@ def _latest_events(store_df: DataFrame, key: str, payload: list[str]) -> DataFra
     )
 
 
-def delete_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the delete-ingest lifecycle —
-    its own fingerprint-tagged trio, pruned like every ingest store."""
-    base = f"del-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_corpus_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
-def stage_delete_batches(spark: SparkSession, sf_dir: str) -> str:
+def stage_delete_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
     """Stage DEL_N_BATCHES single-file arrivals of (doc_id, text, op):
     batches 0/2/4/5 are adds (doc_id % 4 == 0/1/2/3), batch 1 deletes
     the fingerprints of docs with doc_id % 4 == 0 AND doc_id % 3 == 0
@@ -2080,25 +1661,26 @@ def stage_delete_batches(spark: SparkSession, sf_dir: str) -> str:
     the requester's doc_id only as provenance. mtime+name ordering makes
     file i micro-batch i, the property the oracle's batch arithmetic
     states."""
-    arrivals, _, _ = delete_ingest_dirs(sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    mod = F.col("doc_id") % 4
-    slots = {
-        b: docs.filter(mod == m).select(
-            "doc_id", "text", F.lit("add").alias("op")
+
+    def batches() -> list[DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        mod = F.col("doc_id") % 4
+        slots = {
+            b: docs.filter(mod == m).select(
+                "doc_id", "text", F.lit("add").alias("op")
+            )
+            for m, b in DEL_ADD_BATCH.items()
+        }
+        slots[1] = docs.filter(F.expr(DEL_RULE_B1)).select(
+            "doc_id", "text", F.lit("del").alias("op")
         )
-        for m, b in DEL_ADD_BATCH.items()
-    }
-    slots[1] = docs.filter(F.expr(DEL_RULE_B1)).select(
-        "doc_id", "text", F.lit("del").alias("op")
-    )
-    slots[3] = docs.filter(F.expr(DEL_RULE_B3)).select(
-        "doc_id", "text", F.lit("del").alias("op")
-    )
-    assert sorted(slots) == list(range(DEL_N_BATCHES))
-    return _stage_single_file_batches(
-        arrivals, [slots[i] for i in range(DEL_N_BATCHES)]
-    )
+        slots[3] = docs.filter(F.expr(DEL_RULE_B3)).select(
+            "doc_id", "text", F.lit("del").alias("op")
+        )
+        assert sorted(slots) == list(range(DEL_N_BATCHES))
+        return [slots[i] for i in range(DEL_N_BATCHES)]
+
+    return _stage_single_file_batches(arrivals, batches)
 
 
 def _live_fps(store_df: DataFrame) -> DataFrame:
@@ -2148,48 +1730,27 @@ def apply_delete_batch(
             F.lit("del").alias("op"),
         )
     )
-    adds.unionByName(dels).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_batch(adds.unionByName(dels), batch_id, store_dir)
 
 
 def run_delete_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the staged add/delete schedule through the ingester
-    (AvailableNow, one file per micro-batch) and return the store.
-    Idempotent per corpus version: the checkpoint remembers processed
-    files. Asserts the file->batch mapping the oracle's arithmetic
-    assumes (every stored add row's doc_id lands in its schedule's
-    batch)."""
-    arrivals, store, checkpoint = delete_ingest_dirs(sf_dir)
-    stage_delete_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the staged add/delete schedule through the ingester and
+    return the store, asserting the file-to-batch mapping the oracle's
+    arithmetic assumes (every stored add row's doc_id lands in its
+    schedule's batch)."""
+    arrivals, store, checkpoint = state_dirs(
+        "del", sf_dir, "documents", "arrivals", "store", "checkpoint"
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: apply_delete_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stage_delete_batches(spark, sf_dir, arrivals)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: apply_delete_batch(df, bid, store),
     )
-    q.awaitTermination()
-    bad = (
-        spark.read.parquet(store)
-        .filter(
-            (F.col("op") == "add")
-            & (F.expr(DEL_ADD_CASE) != F.col("batch_id").cast("int"))
-        )
-        .count()
+    _assert_batches(
+        spark, store,
+        F.when(F.col("op") == "add", F.expr(DEL_ADD_CASE)),
+        "delete ingest",
     )
-    if bad:
-        raise RuntimeError(
-            f"delete ingest: {bad} add rows landed in the wrong micro-batch"
-        )
     return store
 
 
@@ -2280,68 +1841,36 @@ def stream_store_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQD_QUARTERS = 4
 
 
-def pqd_ingest_dirs(sf_dir: str) -> tuple[str, str, str]:
-    """(arrivals, store, checkpoint) for the PQ delete-ingest lifecycle.
-    Tagged by the embeddings corpus fingerprint (streams vectors)."""
-    from airflow_ml_pipeline_spark.operators.similarity import (
-        _embeddings_fingerprint,
-    )
+def stage_pq_delete_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
+    """Stage the add/delete schedule as DEL_N_BATCHES single-file arrivals
+    of (vec_id, label, embedding, op), file i = micro-batch i. Delete
+    events carry only the key (label/embedding NULL): a deletion request
+    references the indexed vector, not its payload."""
 
-    base = f"pqd-{os.path.basename(os.path.normpath(sf_dir))}"
-    tag = f"{base}-{_embeddings_fingerprint(sf_dir)}"
-    _prune_stale_tags(base, tag)
-    root = os.path.join(INGEST_ROOT, tag)
-    return (
-        os.path.join(root, "arrivals"),
-        os.path.join(root, "store"),
-        os.path.join(root, "checkpoint"),
-    )
-
-
-def stage_pq_delete_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the add/delete schedule as 6 single-file arrivals of
-    (vec_id, label, embedding, op) — mtime+name ordered so file i is
-    micro-batch i. Delete events carry only the key (label/embedding
-    NULL): a deletion request references the indexed vector, not its
-    payload."""
-    arrivals, _, _ = pqd_ingest_dirs(sf_dir)
-    marker = os.path.join(arrivals, "_staged")
-    if os.path.exists(marker):
-        return arrivals
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    n_total = emb.count()
-    oob = emb.filter(
-        F.col("vec_id").isNull()
-        | (F.col("vec_id") < 0)
-        | (F.col("vec_id") >= n_total)
-    ).count()
-    if oob:
-        raise RuntimeError(
-            f"pq delete staging: {oob} vec_ids outside [0, {n_total})"
-            " — range staging requires dense 0..n-1 vec_ids"
+    def batches() -> list[DataFrame]:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", "embedding"
         )
-    q = (F.col("vec_id") * PQD_QUARTERS / F.lit(n_total)).cast("int")
-    nulls = [
-        F.lit(None).cast(emb.schema["label"].dataType).alias("label"),
-        F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
-    ]
-    slots = {
-        b: emb.filter(q == m).select("*", F.lit("add").alias("op"))
-        for m, b in DEL_ADD_BATCH.items()
-    }
-    # the same two rules as the fingerprint schedule, over vec_id/quarter
-    slots[1] = emb.filter((q == 0) & (F.col("vec_id") % 3 == 0)).select(
-        "vec_id", *nulls, F.lit("del").alias("op")
-    )
-    slots[3] = emb.filter((q <= 1) & (F.col("vec_id") % 5 == 2)).select(
-        "vec_id", *nulls, F.lit("del").alias("op")
-    )
-    assert sorted(slots) == list(range(DEL_N_BATCHES))
-    return _stage_single_file_batches(
-        arrivals, [slots[i] for i in range(DEL_N_BATCHES)]
-    )
+        q = _range_batch(_dense_vec_ids(emb, "pq delete"), PQD_QUARTERS)
+        nulls = [
+            F.lit(None).cast(emb.schema["label"].dataType).alias("label"),
+            F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
+        ]
+        slots = {
+            b: emb.filter(q == m).select("*", F.lit("add").alias("op"))
+            for m, b in DEL_ADD_BATCH.items()
+        }
+        # the same two rules as the fingerprint schedule, over vec_id/quarter
+        slots[1] = emb.filter((q == 0) & (F.col("vec_id") % 3 == 0)).select(
+            "vec_id", *nulls, F.lit("del").alias("op")
+        )
+        slots[3] = emb.filter((q <= 1) & (F.col("vec_id") % 5 == 2)).select(
+            "vec_id", *nulls, F.lit("del").alias("op")
+        )
+        assert sorted(slots) == list(range(DEL_N_BATCHES))
+        return [slots[i] for i in range(DEL_N_BATCHES)]
+
+    return _stage_single_file_batches(arrivals, batches)
 
 
 def apply_pq_delete_batch(
@@ -2378,9 +1907,7 @@ def apply_pq_delete_batch(
             F.lit("del").alias("op"),
         )
     )
-    coded.unionByName(dels).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_id={batch_id}")
-    )
+    write_batch(coded.unionByName(dels), batch_id, store_dir)
 
 
 def _live_pq_rows(store_df: DataFrame) -> DataFrame:
@@ -2401,46 +1928,24 @@ def _live_pq_rows(store_df: DataFrame) -> DataFrame:
 
 
 def run_pq_delete_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the staged add/delete schedule through the PQ ingester
-    (AvailableNow, one file per micro-batch) and return the store.
-    Idempotent per corpus version; asserts the file->batch mapping the
-    oracle's arithmetic assumes."""
-    arrivals, store, checkpoint = pqd_ingest_dirs(sf_dir)
-    stage_pq_delete_batches(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    """Replay the staged add/delete schedule through the PQ ingester and
+    return the store, asserting the file-to-batch mapping the oracle's
+    arithmetic assumes."""
+    arrivals, store, checkpoint = state_dirs(
+        "pqd", sf_dir, "embeddings", "arrivals", "store", "checkpoint"
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: apply_pq_delete_batch(df, bid, store)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    stage_pq_delete_batches(spark, sf_dir, arrivals)
+    replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: apply_pq_delete_batch(df, bid, store),
     )
-    q.awaitTermination()
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    quarter = (F.col("vec_id") * PQD_QUARTERS / F.lit(n_total)).cast("int")
-    add_batch = F.lit(DEL_ADD_BATCH[max(DEL_ADD_BATCH)])
-    for m, b in sorted(DEL_ADD_BATCH.items())[:-1]:
-        add_batch = F.when(quarter == m, b).otherwise(add_batch)
-    bad = (
-        spark.read.option("basePath", store)
-        .parquet(store)
-        .filter(
-            (F.col("op") == "add")
-            & (add_batch != F.col("batch_id").cast("int"))
-        )
-        .count()
+    quarter = f"CAST(vec_id * {PQD_QUARTERS} / {n_total} AS INT)"
+    _assert_batches(
+        spark, store,
+        F.when(F.col("op") == "add", F.expr(del_add_case(quarter))),
+        "pq delete ingest",
     )
-    if bad:
-        raise RuntimeError(
-            f"pq delete ingest: {bad} add rows landed in the wrong batch"
-        )
     return store
 
 
@@ -2450,14 +1955,7 @@ def _pq_delete_oracle() -> str:
 
     codes = ", ".join(f"c{mi}" for mi in range(PQ_M))
     q = f"vec_id * {PQD_QUARTERS} // nn.n"
-    add_case = (
-        f"CASE {q} "
-        + " ".join(
-            f"WHEN {m} THEN {b}"
-            for m, b in sorted(DEL_ADD_BATCH.items())[:-1]
-        )
-        + f" ELSE {DEL_ADD_BATCH[max(DEL_ADD_BATCH)]} END"
-    )
+    add_case = del_add_case(q)
     return f"""
     WITH {_sql_pq_coded().lstrip()},
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings)
@@ -2510,8 +2008,7 @@ def compact_delete_store(spark: SparkSession, sf_dir: str) -> str:
     per corpus version; reads against the compacted store are
     BY CONSTRUCTION identical to reads against the full log (the live
     view already selects the max-rank event — tests pin the equality)."""
-    _, store, _ = delete_ingest_dirs(sf_dir)
-    run_delete_ingest(spark, sf_dir)
+    store = run_delete_ingest(spark, sf_dir)
     compacted = f"{store}_compacted"
     marker = os.path.join(compacted, "_compacted")
     if os.path.exists(marker):

@@ -20,29 +20,22 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from airflow_ml_pipeline_spark.sources.catalog import normalize_event_time
+from airflow_ml_pipeline_spark.sources.catalog import (
+    normalize_event_time,
+    table_fingerprint,
+)
 
 STAGE_ROOT = "/tmp/spark_graft_stream"
 
 
 def stage_events_dir(sf_dir: str) -> str:
-    """Copy the events parquet into a staging directory keyed on a CONTENT
-    fingerprint of the source (path + per-file mtime/size) — a corpus
+    """Copy the events parquet into a staging directory keyed on the
+    table's content fingerprint (``catalog.table_fingerprint``) — a corpus
     regenerated in place, or two sf_dirs sharing a basename, must get a
-    fresh staging dir instead of replaying stale events (same staleness
-    contract as the rollup store and IVF index cache; round-3 ADVICE)."""
-    import hashlib
-
+    fresh staging dir instead of replaying stale events."""
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    h = hashlib.sha256(src.encode())
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_mtime_ns}:{st.st_size};".encode())
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}-{h.hexdigest()[:16]}"
+    fp = table_fingerprint(sf_dir, "events")
+    tag = f"{os.path.basename(os.path.normpath(sf_dir))}-{fp}"
     stage = os.path.join(STAGE_ROOT, tag)
     marker = os.path.join(stage, "_staged")
     if not os.path.exists(marker):

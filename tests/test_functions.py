@@ -52,21 +52,6 @@ def test_dsum_is_partition_order_independent(values, n_partitions):
     assert a == expected
 
 
-def test_tfidf_pipeline_shapes(spark, sf_dir):
-    from airflow_ml_pipeline_spark.functions.mltext import fit_transform_tfidf
-    from airflow_ml_pipeline_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    out, model = fit_transform_tfidf(docs)
-    rows = out.select("doc_id", "tfidf").collect()
-    assert len(rows) == 100
-    for r in rows[:10]:
-        v = r.tfidf
-        assert v.size == 1 << 12
-        norm = sum(x * x for x in v.values) ** 0.5
-        assert abs(norm - 1.0) < 1e-6  # L2-normalized
-
-
 def test_sorted_pairs_matches_itertools(spark):
     """The shared in-partition pair-explosion kernel (functions/pairs.py)
     equals itertools.combinations for every list — the index arithmetic

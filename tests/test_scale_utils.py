@@ -228,59 +228,6 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
     assert joined.count() == expected
 
 
-def test_runtime_bloom_prunes_fact_side(spark):
-    """Inside runtime_bloom(application_side_min="0") a selective dim
-    filter must inject a might_contain predicate into the fact side of a
-    shuffle join (rows dropped BEFORE the exchange); with production
-    defaults on test-scale data the filter must NOT fire (the 10GB
-    application-side gate), and results must be identical either way."""
-    from airflow_ml_pipeline_spark.functions.runtime_filter import runtime_bloom
-
-    sf_dir = "/root/testdata/sf0.1"
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-
-    def plan_of(df):
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        baseline = plan_of(j)
-        assert "might_contain" not in baseline, (
-            "bloom fired without the forced thresholds on test-scale data"
-        )
-        plain = j.collect()
-        with runtime_bloom(spark, application_side_min="0"):
-            j2 = (
-                li.join(orders, li.l_orderkey == orders.o_orderkey)
-                .groupBy("o_orderpriority")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            forced = plan_of(j2)
-            assert "might_contain" in forced, forced
-            assert "bloom_filter_agg" in forced, forced
-            assert sorted(map(tuple, j2.collect())) == sorted(map(tuple, plain))
-        # confs restored on exit
-        j3 = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        assert "might_contain" not in plan_of(j3)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_dynamic_partition_pruning_fires_on_selective_dim(spark, tmp_path):
     """Joining a date-partitioned fact with a comparison-filtered dim must
     inject a dynamicpruning partition filter into the fact scan (only

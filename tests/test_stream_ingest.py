@@ -15,7 +15,9 @@ from airflow_ml_pipeline_spark.streaming import ingest
 
 
 def _fresh(spark, sf_dir):
-    arrivals, store, checkpoint = ingest.ingest_dirs(sf_dir)
+    arrivals, store, checkpoint = ingest.state_dirs(
+        "docs", sf_dir, "documents", "arrivals", "store", "checkpoint"
+    )
     for d in (store, checkpoint):
         shutil.rmtree(d, ignore_errors=True)
     return arrivals, store, checkpoint
@@ -109,29 +111,91 @@ def test_near_dup_ingest_replay_and_batch_semantics(spark, sf_dir):
     assert all(i % ingest.NEAR_N_BATCHES != 0 for i in all_ids - surv1)
 
 
-def test_stale_ingest_state_is_pruned(spark, sf_dir, tmp_path, monkeypatch):
+def test_stale_ingest_state_is_pruned(sf_dir, tmp_path, monkeypatch):
     """A regenerated corpus changes the content fingerprint; the previous
     tag's staging/store/checkpoint would otherwise leak in /tmp forever.
-    Old-and-different tags for the same corpus basename are GC'd; young
-    dirs (possibly a concurrent session) and other basenames survive."""
+    Old-and-different tags of the same family and corpus basename are
+    GC'd; young dirs (possibly a concurrent session), other basenames and
+    other families' roots survive — including the events-keyed timing
+    root of the same sf."""
     import os
     import time
 
+    from airflow_ml_pipeline_spark.sources.catalog import table_fingerprint
+
     monkeypatch.setattr(ingest, "INGEST_ROOT", str(tmp_path))
     base = os.path.basename(os.path.normpath(sf_dir))
-    stale = tmp_path / f"{base}-deadbeefdeadbeef"
-    young = tmp_path / f"{base}-cafecafecafecafe"
-    other = tmp_path / "othersf-deadbeefdeadbeef"
-    for d in (stale, young, other):
+    stale = tmp_path / f"docs-{base}-deadbeefdeadbeef"
+    young = tmp_path / f"docs-{base}-cafecafecafecafe"
+    other = tmp_path / "docs-othersf-deadbeefdeadbeef"
+    timing = tmp_path / f"timing-{base}-{table_fingerprint(sf_dir, 'events')}"
+    near = tmp_path / f"near-{base}-deadbeefdeadbeef"
+    for d in (stale, young, other, timing, near):
         d.mkdir()
-    old = time.time() - 100000
-    os.utime(stale, (old, old))
-    os.utime(other, (old, old))
+    old = time.time() - 3 * 3600
+    for d in (stale, other, timing, near):
+        os.utime(d, (old, old))
 
-    ingest.ingest_dirs(sf_dir)
+    ingest.state_dirs("docs", sf_dir, "documents", "store")
     assert not stale.exists(), "old different-fingerprint tag must be GC'd"
     assert young.exists(), "young dirs may belong to a concurrent session"
     assert other.exists(), "other corpus basenames are untouched"
+    assert timing.exists(), "another table's root is untouched"
+    assert near.exists(), "another family's root is untouched"
+
+
+def test_table_fingerprint_tracks_file_versions(sf_dir, tmp_path):
+    """The one content fingerprint: stable across calls, changed by a
+    file's mtime or size under the table, distinct per table, and
+    rejecting unknown tables like ``load_table``."""
+    import os
+
+    import pytest
+
+    from airflow_ml_pipeline_spark.sources.catalog import table_fingerprint
+
+    (tmp_path / "documents.parquet").mkdir()
+    part = tmp_path / "documents.parquet" / "part-0.parquet"
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), part)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+    d = str(tmp_path)
+
+    fp = table_fingerprint(d, "documents")
+    assert fp == table_fingerprint(d, "documents")
+    assert fp != table_fingerprint(d, "events")
+    st = part.stat()
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    touched = table_fingerprint(d, "documents")
+    assert touched != fp
+    with open(part, "ab") as f:
+        f.write(b"\0")
+    assert table_fingerprint(d, "documents") not in (fp, touched)
+    ev = table_fingerprint(d, "events")
+    os.utime(tmp_path / "events.parquet", (0, 0))
+    assert table_fingerprint(d, "events") != ev
+    with pytest.raises(ValueError, match="Unknown table"):
+        table_fingerprint(d, "no_such_table")
+
+
+def test_state_roots_are_read_at_call_time(sf_dir, tmp_path, monkeypatch):
+    """Repointing the three state-root module attributes moves every
+    persisted ingest store, event stage and rollup stage under the new
+    root — nothing captured the /tmp default at import time."""
+    from airflow_ml_pipeline_spark.operators import temporal
+    from airflow_ml_pipeline_spark.streaming import sources
+
+    for mod, attr in (
+        (ingest, "INGEST_ROOT"),
+        (sources, "STAGE_ROOT"),
+        (temporal, "_ROLLUP_STAGE"),
+    ):
+        monkeypatch.setattr(mod, attr, str(tmp_path / attr))
+    for path in (
+        *ingest.state_dirs("timing", sf_dir, "events", "arrivals", "store"),
+        sources.stage_events_dir(sf_dir),
+        temporal._rollup_stage_dir(sf_dir),
+    ):
+        assert path.startswith(str(tmp_path) + "/"), path
 
 
 def test_funnel_rerun_is_stable_and_consistent(spark, sf_dir):

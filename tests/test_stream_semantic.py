@@ -45,8 +45,9 @@ def test_stream_semantic_batch_retry_is_idempotent(spark, sf_dir):
     the checkpoint can trigger) rewrites the same partition with the
     same rows — survivors and store byte-converge."""
     survivors_dir = ingest.run_sem_dedup_ingest(spark, sf_dir)
-    _, store, _, _ = ingest.sem_ingest_dirs(sf_dir)
-    arrivals, _, _, _ = ingest.sem_ingest_dirs(sf_dir)
+    arrivals, store = ingest.state_dirs(
+        "sem", sf_dir, "embeddings", "arrivals", "store"
+    )
     last = ingest.SEM_N_BATCHES - 1
     before = sorted(
         tuple(r)
@@ -72,7 +73,7 @@ def test_stream_semantic_store_records_every_arrival(spark, sf_dir):
     vectors included — the batch twin's prune rule compares against
     pruned vectors too), partitioned by the staged batch."""
     ingest.run_sem_dedup_ingest(spark, sf_dir)
-    _, store, _, _ = ingest.sem_ingest_dirs(sf_dir)
+    (store,) = ingest.state_dirs("sem", sf_dir, "embeddings", "store")
     n_store = spark.read.option("basePath", store).parquet(store).count()
     n_all = load_table(spark, sf_dir, "embeddings").count()
     assert n_store == n_all

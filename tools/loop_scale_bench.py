@@ -110,7 +110,12 @@ def run(cpus: str) -> None:
 
 
 if __name__ == "__main__":
-    if sys.argv[1] == "build":
+    cmd = sys.argv[1:2]
+    if cmd == ["build"]:
         build()
-    else:
+    elif cmd == ["run"]:
         run(sys.argv[2] if len(sys.argv) > 2 else "32")
+    else:
+        print("usage: python tools/loop_scale_bench.py build | run [cpus]",
+              file=sys.stderr)
+        sys.exit(2)
