@@ -16,7 +16,8 @@ the shapes AQE cannot fix:
 All are pure DataFrame compositions and oracle-transparent (results are
 identical to the unsalted plan — tests assert equality).
 
-Scoping (measured, tools/skew_demo.py, 20M rows with one key owning 35%):
+Scoping (measured on 20M rows with one key owning 35%; result equality of
+each kernel is pinned by tests/test_scale_utils.py::test_salted_*):
 for ALGEBRAIC aggregates (count/sum/min/max/avg) Spark's map-side partial
 aggregation already neutralizes hot keys — each map task emits ONE partial
 row per key, so the hot reducer receives #map-tasks rows, and salting only

@@ -1840,7 +1840,18 @@ def containment_dropped_ids(batch_fps: DataFrame, hist_fps: DataFrame) -> DataFr
     discriminative (doc_id, fp) postings for the incoming batch and the
     historical store, return the batch doc_ids with
     |fp(b) ∩ fp(h)| / |fp(b)| >= CONTAINMENT_THRESHOLD for some historical
-    doc h, scoring only batch docs with >= MIN_FP_COUNT postings."""
+    doc h, scoring only batch docs with >= MIN_FP_COUNT postings.
+
+    Both sides must encode ``fp`` the same way (16-byte binary or 32-char
+    hex): Spark's implicit binary/string cast compares raw bytes to hex
+    text, so a mismatched join would silently match zero rows."""
+    b_type = batch_fps.schema["fp"].dataType
+    h_type = hist_fps.schema["fp"].dataType
+    if b_type != h_type:
+        raise TypeError(
+            f"containment_dropped_ids: fp is {b_type.simpleString()} in "
+            f"batch_fps but {h_type.simpleString()} in hist_fps"
+        )
     sizes = batch_fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     shared = (
         batch_fps.select(F.col("doc_id").alias("bdoc"), "fp")

@@ -140,7 +140,11 @@ def _anomaly_zscores(
     )
 
     six = Decimal("0.000001")
-    buf: list[float] = list(state.get[0]) if state.exists else []
+    # bounded per row, not per batch: a long replay batch never holds more
+    # than the baseline window of raw values for a key
+    buf: deque[float] = deque(
+        state.get[0] if state.exists else (), maxlen=ANOMALY_BASELINE_ROWS
+    )
     out: dict[str, list] = {k: [] for k in ("event_id", "event_type", "ts_us", "value", "z")}
     # ONE sort over the whole micro-batch: applyInPandasWithState delivers a
     # key's rows as multiple Arrow chunks in shuffle-arrival order, so
@@ -209,9 +213,7 @@ def _anomaly_zscores(
                 q0 = qs.popleft()
                 s_dec -= q0
                 ss_dec -= q0 * q0
-        if len(buf) > ANOMALY_BASELINE_ROWS:
-            buf = buf[-ANOMALY_BASELINE_ROWS:]
-    state.update((buf,))
+    state.update((list(buf),))
     yield pd.DataFrame(out)
 
 

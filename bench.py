@@ -217,9 +217,9 @@ HEADLINE = [
 def warm_session(spark, sf_dir: str, qs) -> None:
     """Warm the JVM, codegen, parquet footer caches, Python worker pool,
     and streaming engine so the first timed query measures the operator,
-    not engine startup. THE shared warmup — tools/ab_bench.py imports
-    this so per-query A/B re-benches run under the identical regime as
-    the round bench (r7 review: a hand-copied subset drifted)."""
+    not engine startup. THE shared warmup — tools/measure.py imports
+    this so per-query measurements and A/B re-runs use the identical
+    regime as the round bench (r7 review: a hand-copied subset drifted)."""
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     from pyspark.sql import functions as F
 
@@ -288,37 +288,19 @@ def main() -> None:
 
     # Contention guard (VERDICT r10 ask #2: the r10 driver's single-pass
     # run read 1.36x on code three other runs agreed was 0.93x — one
-    # noisy pass whipsawed the round narrative). Modes via BENCH_REPEAT:
-    #   unset / "guard" — DEFAULT: one timed pass per query; any query
-    #     whose first reading exceeds max(2 s, 1.5x its committed
-    #     previous-round time in bench_results.json) is re-timed once
-    #     and the MIN is the headline (both readings land in
-    #     bench_results.json: "first_pass" + "queries"=min, headline =
-    #     min-sum). A query with no committed prior uses the bare 2 s
-    #     floor — new expensive queries always get a second reading.
-    #   "0" — single-shot, guard off (the pre-r11 behavior).
-    #   N>=2 — every query N times, min recorded (steady-state A/B).
-    mode = os.environ.get("BENCH_REPEAT", "guard")
-    # validate up front (ADVICE r11): a typo like BENCH_REPEAT=min used to
-    # crash with ValueError AFTER the warm-up had been paid — fall back to
-    # guard mode with a visible note instead
-    if mode not in ("", "guard"):
-        try:
-            int(mode)
-        except ValueError:
-            print(
-                f"# BENCH_REPEAT={mode!r} is not an integer or 'guard';"
-                " falling back to guard mode",
-                file=sys.stderr,
-            )
-            mode = "guard"
-    prev_times: dict[str, float] = {}
-    if mode in ("", "guard"):
-        try:
-            with open(OUT_PATH) as f:
-                prev_times = json.load(f).get("queries", {}) or {}
-        except (OSError, ValueError):
-            prev_times = {}
+    # noisy pass whipsawed the round narrative): one timed pass per query;
+    # any query whose first reading exceeds max(2 s, 1.5x its committed
+    # previous-round time in bench_results.json) is re-timed once and the
+    # MIN is the headline (both readings land in bench_results.json:
+    # "first_pass" + "queries"=min, headline = min-sum). A query with no
+    # committed prior uses the bare 2 s floor — new expensive queries
+    # always get a second reading. Repeated steady-state timing of chosen
+    # queries is tools/measure.py -n N.
+    try:
+        with open(OUT_PATH) as f:
+            prev_times: dict[str, float] = json.load(f).get("queries", {}) or {}
+    except (OSError, ValueError):
+        prev_times = {}
 
     def _run_once(name: str):
         t0 = time.time()
@@ -339,16 +321,10 @@ def main() -> None:
     for name in names:
         dt, df = _run_once(name)
         first_pass[name] = round(dt, 3)
-        if mode in ("", "guard"):
-            threshold = max(2.0, 1.5 * float(prev_times.get(name, 0.0)))
-            if dt > threshold:
-                dt2, df = _run_once(name)
-                retimed.append(name)
-                dt = min(dt, dt2)
-        else:
-            for _ in range(max(0, int(mode) - 1)):
-                dt2, df = _run_once(name)
-                dt = min(dt, dt2)
+        if dt > max(2.0, 1.5 * float(prev_times.get(name, 0.0))):
+            dt2, df = _run_once(name)
+            retimed.append(name)
+            dt = min(dt, dt2)
         timings[name] = round(dt, 3)
         # row counts are a sanity signal, not a timing: BENCH_ROWS=1 opts in
         # (a count re-executes the query, doubling suite wall-clock)

@@ -509,6 +509,20 @@ def test_containment_dropped_ids_threshold_semantics(spark):
     assert dropped == {1}
 
 
+def test_containment_dropped_ids_rejects_mixed_fp_encodings(spark):
+    """A binary-fp batch against a hex-fp store (the batch twin's postings
+    vs the streaming store's format) must raise, not join zero rows: the
+    same fingerprints encoded two ways never compare equal."""
+    hist = spark.createDataFrame(
+        [(100, i) for i in range(10)], ["doc_id", "i"]
+    ).select("doc_id", F.md5(F.col("i").cast("string")).alias("fp"))
+    batch = hist.select(
+        (F.col("doc_id") - 99).alias("doc_id"), F.unhex("fp").alias("fp")
+    )
+    with pytest.raises(TypeError, match="binary in batch_fps but string"):
+        dedup.containment_dropped_ids(batch, hist)
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(

@@ -3,9 +3,10 @@ rows-shuffled-per-row-read ceilings for the scale-critical families, so a
 refactor that un-prunes a payload column (or reintroduces an Expand
 under heavy aggregation buffers) fails CI instead of a 100 TB run.
 
-Runs ``tools/shuffle_audit.py`` as a SUBPROCESS: event logging is a
-SparkContext-creation option, so the audit needs its own JVM — the
-shared test session cannot be retrofitted with an event log.
+Runs ``tools/measure.py`` as a SUBPROCESS: the tool starts and stops its
+own session and attributes every job submitted while a query runs to
+that query, so it needs a JVM where nothing else runs — not the shared
+test session.
 
 Ceilings are sf0.01 measurements with ~2x headroom (the ratio is a plan
 property, far more stable than wall time — the audit counts rows, not
@@ -97,8 +98,8 @@ def audit() -> dict[str, dict[str, int]]:
         out = f.name
     try:
         subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "shuffle_audit.py"),
-             "--json", out, SF_DIR, *names],
+            [sys.executable, os.path.join(REPO, "tools", "measure.py"),
+             "--json", out, "--sf", SF_DIR, *names],
             cwd=REPO, check=True, capture_output=True, timeout=900,
         )
         with open(out) as f:
@@ -162,3 +163,17 @@ def test_gram_kernel_family_stays_vocabulary_sized(audit):
     assert not over, f"gram kernels shuffling more than {GRAM_CEILING}x input: {over}"
     for n in GRAM_KERNELS:
         assert audit[n]["spill"] == 0
+
+
+def test_measure_rejects_unknown_query_before_starting_spark():
+    """An unknown name prints usage and exits 2 before any JVM starts: with
+    JAVA_HOME pointing nowhere, a session start would fail with exit 1."""
+    env = {**os.environ, "JAVA_HOME": os.path.join(REPO, "no-such-java")}
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "measure.py"),
+         "pricing_summary", "no_such_query"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 2, res.stderr
+    assert res.stderr.startswith("usage: tools/measure.py"), res.stderr
+    assert "unknown queries: no_such_query" in res.stderr, res.stderr

@@ -225,8 +225,9 @@ FOOTER = """
   bucket both sides by `(user_id, date_trunc('hour', ts))` and join each
   probe row against its own and the previous hour bucket — turns the
   residual range scan from O(|user history|) into O(|2 buckets|).
-- **Hot keys** (`functions/skew.py`, measured by `tools/skew_demo.py`
-  on 20M rows with one key owning 35%): the replicated salted join wins
+- **Hot keys** (`functions/skew.py`, measured on 20M rows with one key
+  owning 35%; result equality pinned by
+  `test_salted_aggregation_equals_plain`): the replicated salted join wins
   — 1.8s vs 3.1s plain sort-merge with AQE skew-split off (AQE's own
   split: 5.0s this run) — and the value-salted exact distinct count
   wins — 2.7s vs 3.2s plain (the hot key's ~7M distinct values fan into
@@ -272,9 +273,9 @@ FOOTER = """
   deltas under ~1.4x are therefore noise here; the signal is in the
   order-of-magnitude wins (near_dup_clusters 11.4→~4s, serving 515→6ms)
   and in plan shape, which PLANS.md and the plan-contract tests pin
-  deterministically. `BENCH_REPEAT=N` (bench.py) opts into min-of-N
-  steady-state timing; the default stays single-shot for comparability
-  with earlier rounds.
+  deterministically. `tools/measure.py -n N` times chosen queries N
+  times back to back in one session; `bench.py` stays single-shot (plus
+  its contention re-time) for comparability with earlier rounds.
 - **Serving latency** (D5, measured by `tools/serve_bench.py` over real
   HTTP, 40 requests after warmup): POST /predict p50/p95 = 5.6/6.7 ms
   single-row, 141/173 ms for a 100-row batch (1.4 ms/row). The route
