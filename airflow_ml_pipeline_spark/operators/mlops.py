@@ -8,7 +8,6 @@ oracle-checked.
 
 from __future__ import annotations
 
-import atexit
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 from airflow_ml_pipeline_spark.functions.compare import SQL_DAVG, davg
 from airflow_ml_pipeline_spark.plans.registry import query
 from airflow_ml_pipeline_spark.sources.catalog import load_table
+from airflow_ml_pipeline_spark.streaming.ingest import process_root
 
 
 @query("synthetic_customers")  # rows-only: distributed RNG has no SQL twin
@@ -32,78 +32,13 @@ def synthetic_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: staged checkpoint of the generated churn frame — written by the query,
-#: read by its oracle (same lifecycle as the streaming ingest stores under
-#: /tmp/spark_graft_ingest); content is session-independent because the
-#: generator's seed relation is partition-pinned (generate.GEN_PARTITIONS).
-#: PID-keyed (ADVICE r11): mode('overwrite') is not atomic, so a fixed
-#: path let a concurrent session (bench + driver) re-stage while this
-#: session's oracle globbed '*.parquet' — each process now stages its own
-#: copy, and the oracle f-string below interpolates THIS process's path at
-#: the same import, so the pair can never split.
-STAGE_CUSTOMERS = (
-    f"/tmp/spark_graft_stage/synthetic_customers_2000_{os.getpid()}.parquet"
-)
-
-
-def _cleanup_stage() -> None:
-    """Remove this process's staged copy at interpreter exit (ADVICE
-    r12: without this, every bench/driver/test process leaves its
-    per-PID directory behind and /tmp accumulates staged copies
-    indefinitely)."""
-    import shutil
-
-    shutil.rmtree(STAGE_CUSTOMERS, ignore_errors=True)
-
-
-#: foreign staged copies older than this are garbage even if their pid
-#: probe says "alive" — 12 h is double a driver round's wall-clock
-_STAGE_MAX_AGE_S = 12 * 3600
-
-
-def _prune_dead_stages() -> None:
-    """Sweep stale per-PID staged copies left by processes that never
-    reached atexit (SIGKILL'd bench runs, driver timeouts — VERDICT r13
-    noted /tmp accumulation survives the atexit hook). A staged path
-    whose embedded PID is no longer alive is garbage by construction:
-    the path is only ever read by the process that wrote it. The PID
-    probe alone is not sufficient (ADVICE r14): a RECYCLED pid — or one
-    now owned by another uid, the PermissionError arm — would keep a
-    dead process's staging alive indefinitely, so the sweep is also
-    age-gated: any foreign stage untouched for _STAGE_MAX_AGE_S is
-    removed regardless of the probe (PID reuse then merely delays
-    cleanup instead of blocking it). Sweeping an old stage whose owner
-    IS still alive is safe (r15 review): every consumer —
-    ``engineered_customer_features`` and the driver's oracle read that
-    follows it — REWRITES the stage (mode("overwrite")) before reading,
-    so a swept dir is recreated at the owner's next use and the only
-    dirs that stay deleted are ones nothing has used for
-    _STAGE_MAX_AGE_S."""
-    import glob
-    import re
-    import shutil
-    import time
-
-    for p in glob.glob("/tmp/spark_graft_stage/synthetic_customers_2000_*"):
-        m = re.search(r"_(\d+)\.parquet$", p)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        try:
-            age = time.time() - os.stat(p).st_mtime
-        except OSError:
-            continue  # vanished under a concurrent sweep
-        if age > _STAGE_MAX_AGE_S:
-            shutil.rmtree(p, ignore_errors=True)
-            continue
-        try:
-            os.kill(int(m.group(1)), 0)
-        except ProcessLookupError:
-            shutil.rmtree(p, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — the age gate will reap it
-
-
-atexit.register(_cleanup_stage)
-_prune_dead_stages()
+#: read by its oracle, under this process's state root
+#: (``ingest.process_root``), which is removed at exit. The one state path
+#: resolved at import: the oracle f-string below embeds it, so the query
+#: and its oracle always name the same copy. Content is
+#: session-independent because the generator's seed relation is
+#: partition-pinned (generate.GEN_PARTITIONS).
+STAGE_CUSTOMERS = os.path.join(process_root(), "synthetic_customers_2000.parquet")
 
 #: frozen fit-time 75th percentile of monthly_charges on the committed
 #: (seed=42, n=2000, 16-partition) generated frame — the preprocessor's

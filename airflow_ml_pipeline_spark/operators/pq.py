@@ -1108,7 +1108,7 @@ def _pq_store_dir(sf_dir: str) -> str:
     PARTITIONED BY cluster_id — the physical layout the module docstring
     promises (cell id as the partition key), which is what makes the
     rebalance overwrite cell-scoped. One ingest state family
-    (``ingest.state_dirs``), so it is keyed and pruned like every store."""
+    (``ingest.state_dirs``), so it is keyed and removed like every store."""
     from airflow_ml_pipeline_spark.streaming.ingest import state_dirs
 
     return state_dirs("pqidx", sf_dir, "embeddings", "store")[0]
@@ -1177,10 +1177,9 @@ def pq_rebalance_plan_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def build_stale_pq_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the stale store (idempotent per corpus version):
     (vec_id, label, pq_code, vnorm, reencoded=false) partitioned by
-    cluster_id. The build is staged to a tmp dir and renamed, the same
-    crash-safe convention as the streaming ingesters' staging."""
+    cluster_id. The ``_stale_built`` marker is written last, so a retry
+    after a failed build rebuilds."""
     import os
-    import shutil
 
     store = _pq_store_dir(sf_dir)
     marker = os.path.join(store, "_stale_built")
@@ -1194,12 +1193,7 @@ def build_stale_pq_store(spark: SparkSession, sf_dir: str) -> str:
         F.lit(False).alias("reencoded"),
         "cluster_id",
     )
-    tmp = f"{store}.build.{os.getpid()}"
-    st.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-    try:
-        os.rename(tmp, store)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st.write.mode("overwrite").partitionBy("cluster_id").parquet(store)
     with open(marker, "w") as f:
         f.write("ok")
     return store

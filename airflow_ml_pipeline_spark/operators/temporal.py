@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from airflow_ml_pipeline_spark.functions.compare import SQL_DSUM, SQL_TS, fmt_ts
 from airflow_ml_pipeline_spark.plans.registry import query
-from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerprint
+from airflow_ml_pipeline_spark.sources.catalog import load_table
 
 
 def asof_join_last_event(
@@ -304,20 +304,6 @@ def events_daily_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ROLLUP_CUTOFF = "2024-01-16 00:00:00"  # mid-corpus: ~half materialized, half live
-_ROLLUP_STAGE = "/tmp/spark_graft_rollup"
-
-
-def _rollup_stage_dir(sf_dir: str) -> str:
-    """Stage dir keyed on the events table's content fingerprint
-    (``catalog.table_fingerprint``), not just the sf_dir basename, so a
-    corpus regenerated in place, or two sf_dirs sharing a basename, get
-    distinct stage dirs instead of silently serving a stale rollup. In
-    production this is the refresh-watermark check of the scheduled
-    incremental job."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(
-        _ROLLUP_STAGE, f"{tag}-{table_fingerprint(sf_dir, 'events')}"
-    )
 
 
 @query(
@@ -340,19 +326,14 @@ def events_hourly_continuous(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is decimal-exact, so the result equals full-batch aggregation
     bit-for-bit — which is precisely what the oracle states. At 100 TB the
     query reads O(hours) pre-aggregated rows plus one raw partition
-    instead of the whole fact table."""
-    out = _rollup_stage_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        # build into a per-process temp dir and publish with an atomic rename
-        # so concurrent sessions never observe (or clobber) a half-built store
-        tmp = f"{out}.build.{os.getpid()}"
-        materialize_hourly_rollup(spark, sf_dir, tmp, ROLLUP_CUTOFF)
-        try:
-            os.rename(tmp, out)
-        except OSError:  # another session published first; use theirs
-            import shutil
+    instead of the whole fact table. The rollup is one ingest state
+    family keyed on the events table's fingerprint — in production, the
+    refresh-watermark check of the scheduled incremental job."""
+    from airflow_ml_pipeline_spark.streaming.ingest import state_dirs
 
-            shutil.rmtree(tmp, ignore_errors=True)
+    (out,) = state_dirs("rollup", sf_dir, "events", "stage")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        materialize_hourly_rollup(spark, sf_dir, out, ROLLUP_CUTOFF)
     merged = hourly_with_tail(spark, sf_dir, out, ROLLUP_CUTOFF)
     return merged.select(
         fmt_ts(F.col("bucket")).alias("bucket_ts"),

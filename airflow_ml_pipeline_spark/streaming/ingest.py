@@ -9,15 +9,16 @@ Every query runs the same skeleton and keeps only its staging frames, its
 batch function, its post-run check, its oracle and its query body:
 
 - ``state_dirs(family, sf_dir, table, *names)`` names its directories,
-  ``<INGEST_ROOT>/<family>-<sf>-<fp>/<name>``: ``<sf>`` is the sf_dir
-  basename and ``<fp>`` the ``catalog.table_fingerprint`` of the table the
-  family replays, so a regenerated table gets fresh arrivals, store and
+  ``<process root>/<family>-<sf>-<fp>/<name>``. The process root
+  (``process_root``) is this process's own directory under
+  ``INGEST_ROOT``, removed at exit; ``<sf>`` is the sf_dir basename and
+  ``<fp>`` the ``catalog.table_fingerprint`` of the table the family
+  replays, so a regenerated table gets fresh arrivals, store and
   checkpoint. Streams that share arrivals share a family (funnel and PII;
   the four eviction-timing streams);
 - a stager writes the arrivals once per table version through
   ``_stage_single_file_batches``: micro-batch i's rows as ONE parquet
-  file, mtimes strictly ascending, built under ``<arrivals>.build.<pid>``
-  and published by rename — so file i IS micro-batch i (the exact
+  file, mtimes strictly ascending — so file i IS micro-batch i (the exact
   ingester's ``stage_documents_stream`` range split is the one stager
   whose batch boundaries no oracle states);
 - ``replay`` runs the one AvailableNow file replay, one file per trigger,
@@ -38,15 +39,19 @@ Exactly-once contract (the part worth copying):
 - store reads never conflict with the write because each batch writes its
   own subdirectory, not the root.
 
-Re-running a query against an unchanged table is a replay no-op: the
-checkpoint remembers the processed files and the store has converged.
+Re-running a query against an unchanged table in the same process is a
+replay no-op: the checkpoint remembers the processed files and the store
+has converged. A new process always replays from empty state, so no
+result depends on state an earlier run left on the host.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
 import re
+import secrets
 import shutil
 import time
 from collections.abc import Callable
@@ -59,34 +64,70 @@ from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerpr
 
 INGEST_ROOT = "/tmp/spark_graft_ingest"
 N_STAGE_FILES = 4
-#: a state root under a superseded fingerprint is GC'd only once untouched
-#: this long, so a concurrently running session is never pulled out from
-#: under
-_STALE_AGE_S = 7200
+#: a foreign process root untouched this long is swept even if its pid
+#: probe says alive (a recycled pid would otherwise keep it forever)
+_MAX_AGE_S = 12 * 3600
+
+_TAG = ""
+_ROOTS: set[str] = set()
+
+
+def process_root() -> str:
+    """This process's state root, ``<INGEST_ROOT>/<pid>-<token>``: every
+    persisted store, stage and marker lives under it, so no result
+    depends on state left by another process. ``INGEST_ROOT`` is read at
+    call time, so a caller may repoint it. The first call under a root
+    sweeps that root's children whose pid is dead, or that are untouched
+    for ``_MAX_AGE_S`` (roots named in any other layout have no pid and
+    go by age alone). One exit hook removes every process root handed
+    out, in the creating process only (a forked child shares the tag)."""
+    global _TAG
+    if not _TAG:
+        _TAG = f"{os.getpid()}-{secrets.token_hex(4)}"
+        atexit.register(_remove_process_roots, os.getpid())
+    root = os.path.join(INGEST_ROOT, _TAG)
+    if root not in _ROOTS:
+        _ROOTS.add(root)
+        _sweep(INGEST_ROOT)
+    return root
+
+
+def _sweep(parent: str) -> None:
+    if not os.path.isdir(parent):
+        return
+    for d in os.listdir(parent):
+        if d == _TAG:
+            continue
+        path = os.path.join(parent, d)
+        try:
+            age = time.time() - os.stat(path).st_mtime
+        except OSError:
+            continue  # vanished under a concurrent sweep
+        m = re.fullmatch(r"(\d+)-[0-9a-f]+", d)
+        if age > _MAX_AGE_S:
+            shutil.rmtree(path, ignore_errors=True)
+        elif m:
+            try:
+                os.kill(int(m.group(1)), 0)
+            except ProcessLookupError:
+                shutil.rmtree(path, ignore_errors=True)
+            except PermissionError:
+                pass  # alive under another uid; the age gate reaps it
+
+
+def _remove_process_roots(owner: int) -> None:
+    if os.getpid() == owner:
+        for root in _ROOTS:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def state_dirs(family: str, sf_dir: str, table: str, *names: str) -> tuple[str, ...]:
-    """``<INGEST_ROOT>/<family>-<sf>-<fp>/<name>`` for each of ``names``:
-    one root per ingest family and version of ``table`` (``<fp>`` is its
-    ``table_fingerprint``). A regenerated table would leave its old root
-    unreachable forever, so roots of the SAME family and sf under another
-    fingerprint are removed once untouched for ``_STALE_AGE_S``; roots of
-    other families or other sfs are never touched. ``INGEST_ROOT`` is read
-    at call time, so a caller may repoint it."""
-    prefix = f"{family}-{os.path.basename(os.path.normpath(sf_dir))}-"
-    tag = prefix + table_fingerprint(sf_dir, table)
-    stale = re.compile(re.escape(prefix) + "[0-9a-f]{16}")
-    if os.path.isdir(INGEST_ROOT):
-        for d in os.listdir(INGEST_ROOT):
-            if d == tag or not stale.fullmatch(d):
-                continue
-            path = os.path.join(INGEST_ROOT, d)
-            try:
-                if time.time() - os.stat(path).st_mtime > _STALE_AGE_S:
-                    shutil.rmtree(path, ignore_errors=True)
-            except OSError:
-                pass
-    root = os.path.join(INGEST_ROOT, tag)
+    """``<process root>/<family>-<sf>-<fp>/<name>`` for each of
+    ``names``: one root per ingest family and version of ``table``
+    (``<fp>`` is its ``table_fingerprint``), so a table regenerated
+    within one process still gets fresh state."""
+    tag = f"{family}-{os.path.basename(os.path.normpath(sf_dir))}-"
+    root = os.path.join(process_root(), tag + table_fingerprint(sf_dir, table))
     return tuple(os.path.join(root, n) for n in names)
 
 
@@ -163,29 +204,23 @@ def _stage_single_file_batches(
     replay: frame i becomes ONE parquet file ``batch-i.parquet`` with
     strictly increasing mtimes AND sorted names, so the file source's
     (mtime, path) ordering replays them as micro-batches 0..N-1
-    deterministically. Built under ``<arrivals>.build.<pid>`` and
-    published by rename, so a concurrent session never sees a half-staged
-    directory. Idempotent: with the ``_staged`` marker present,
-    ``make_batches`` (and any eager job or guard in it) never runs."""
+    deterministically. Idempotent: with the ``_staged`` marker (written
+    last) present, ``make_batches`` (and any eager job or guard in it)
+    never runs."""
     marker = os.path.join(arrivals, "_staged")
     if os.path.exists(marker):
         return arrivals
     batches = make_batches()
-    tmp = f"{arrivals}.build.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
+    os.makedirs(arrivals, exist_ok=True)
     for i, b in enumerate(batches):
-        part_dir = os.path.join(tmp, f"part{i}")
+        part_dir = os.path.join(arrivals, f"part{i}")
         b.coalesce(1).write.mode("overwrite").parquet(part_dir)
         src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(tmp, f"batch-{i}.parquet")
+        dst = os.path.join(arrivals, f"batch-{i}.parquet")
         os.rename(src, dst)
         shutil.rmtree(part_dir, ignore_errors=True)
         t = time.time() + i
         os.utime(dst, (t, t))
-    try:
-        os.rename(tmp, arrivals)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
     with open(marker, "w") as f:
         f.write("ok")
     return arrivals
@@ -218,14 +253,9 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(arrivals, "_staged")
     if not os.path.exists(marker):
         docs = load_table(spark, sf_dir, "documents")
-        tmp = f"{arrivals}.build.{os.getpid()}"
         docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
             "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, arrivals)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+        ).parquet(arrivals)
         with open(marker, "w") as f:
             f.write("ok")
     return arrivals
@@ -363,12 +393,11 @@ def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
         "arrivals", "store", "checkpoint", "survivors", "stop_fps",
     )
     stage_mod_batches(spark, sf_dir, arrivals, NEAR_N_BATCHES)
-    if not os.path.isdir(stop_dir):
+    if not os.path.exists(os.path.join(stop_dir, "_SUCCESS")):
         docs = load_table(spark, sf_dir, "documents")
         stop_fps(winnow_md5_postings(docs)).write.mode("overwrite").parquet(
-            f"{stop_dir}.build"
+            stop_dir
         )
-        os.rename(f"{stop_dir}.build", stop_dir)
     replay(
         spark, arrivals, checkpoint,
         lambda df, bid: upsert_near_batch(df, bid, store, survivors, stop_dir),
@@ -2016,12 +2045,7 @@ def compact_delete_store(spark: SparkSession, sf_dir: str) -> str:
     folded = _latest_events(
         spark.read.parquet(store), "fp", ["doc_id"]
     ).select("fp", "op", "doc_id", F.col("b").alias("batch_id"))
-    tmp = f"{compacted}.build.{os.getpid()}"
-    folded.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, compacted)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+    folded.write.mode("overwrite").parquet(compacted)
     with open(marker, "w") as f:
         f.write("ok")
     return compacted

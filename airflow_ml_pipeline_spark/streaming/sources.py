@@ -20,23 +20,18 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from airflow_ml_pipeline_spark.sources.catalog import (
-    normalize_event_time,
-    table_fingerprint,
-)
-
-STAGE_ROOT = "/tmp/spark_graft_stream"
+from airflow_ml_pipeline_spark.sources.catalog import normalize_event_time
 
 
 def stage_events_dir(sf_dir: str) -> str:
-    """Copy the events parquet into a staging directory keyed on the
-    table's content fingerprint (``catalog.table_fingerprint``) — a corpus
-    regenerated in place, or two sf_dirs sharing a basename, must get a
-    fresh staging dir instead of replaying stale events."""
+    """Copy the events parquet into a staging directory, one ingest state
+    family keyed on the table's content fingerprint (``ingest.state_dirs``)
+    — a corpus regenerated in place, or two sf_dirs sharing a basename,
+    must get a fresh staging dir instead of replaying stale events."""
+    from airflow_ml_pipeline_spark.streaming.ingest import state_dirs
+
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    fp = table_fingerprint(sf_dir, "events")
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}-{fp}"
-    stage = os.path.join(STAGE_ROOT, tag)
+    (stage,) = state_dirs("events", sf_dir, "events", "stage")
     marker = os.path.join(stage, "_staged")
     if not os.path.exists(marker):
         os.makedirs(stage, exist_ok=True)

@@ -18,13 +18,16 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
+import os
 import sys
 import duckdb
 from pyspark.sql import SparkSession
 
 spark = SparkSession.builder.master("local[4]").appName("fidelity").getOrCreate()
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.getcwd())
 import __spark_entry__ as entry
 
 sf = "/root/testdata/sf0.001"
@@ -82,7 +85,7 @@ def test_plain_session_non_utc_matches_oracle():
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
     assert "FIDELITY_OK" in proc.stdout

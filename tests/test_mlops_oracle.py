@@ -63,8 +63,9 @@ def test_stage_dir_is_rewritten(spark, sf_dir, tmp_path, monkeypatch):
 
     stage = str(tmp_path / "stage.parquet")
     monkeypatch.setattr(mlops, "STAGE_CUSTOMERS", stage)
-    # note: the oracle string already interpolated the real path at
-    # import; this test only exercises the engine-side write lifecycle
+    # note: the oracle string already interpolated the real path
+    # (<ingest process root>/synthetic_customers_2000.parquet) at import;
+    # this test only exercises the engine-side write lifecycle
     n1 = mlops.engineered_customer_features(spark, sf_dir).count()
     assert os.path.isdir(stage)
     n2 = mlops.engineered_customer_features(spark, sf_dir).count()

@@ -111,37 +111,97 @@ def test_near_dup_ingest_replay_and_batch_semantics(spark, sf_dir):
     assert all(i % ingest.NEAR_N_BATCHES != 0 for i in all_ids - surv1)
 
 
-def test_stale_ingest_state_is_pruned(sf_dir, tmp_path, monkeypatch):
-    """A regenerated corpus changes the content fingerprint; the previous
-    tag's staging/store/checkpoint would otherwise leak in /tmp forever.
-    Old-and-different tags of the same family and corpus basename are
-    GC'd; young dirs (possibly a concurrent session), other basenames and
-    other families' roots survive — including the events-keyed timing
-    root of the same sf."""
+_STATE_DIRS_SCRIPT = """
+import os, sys
+from airflow_ml_pipeline_spark.streaming import ingest
+ingest.INGEST_ROOT = sys.argv[1]
+(store,) = ingest.state_dirs("docs", sys.argv[2], "documents", "store")
+os.makedirs(store, exist_ok=True)
+print(store)
+"""
+
+
+def test_state_dirs_are_per_process_and_removed_at_exit(sf_dir, tmp_path):
+    """Two processes asking for the same family get different state
+    dirs, and neither dir outlives its process: no run can read a store
+    another process built."""
     import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [
+        subprocess.run(
+            [sys.executable, "-c", _STATE_DIRS_SCRIPT, str(tmp_path), sf_dir],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert paths[0] != paths[1]
+    for p in paths:
+        assert p.startswith(str(tmp_path) + "/"), p
+        assert not os.path.exists(p), p
+    assert os.listdir(tmp_path) == []
+
+
+def test_process_root_sweeps_dead_and_aged_roots(tmp_path, monkeypatch):
+    """The first use of a root sweeps siblings whose pid is dead or that
+    are untouched for 12 h (old-layout family roots by age alone); a
+    young root of a live foreign process survives."""
+    import os
+    import subprocess
+    import sys
     import time
 
-    from airflow_ml_pipeline_spark.sources.catalog import table_fingerprint
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    live = os.getppid()
+    young_live, old_live = f"{live}-0a0a0a0a", f"{live}-0b0b0b0b"
+    young_family, old_family = "docs-sf0.001-cafecafecafecafe", "near-sf0.001-deadbeefdeadbeef"
+    for d in (f"{dead}-0c0c0c0c", young_live, old_live, young_family, old_family):
+        (tmp_path / d).mkdir()
+    old = time.time() - 13 * 3600
+    for d in (old_live, old_family):
+        os.utime(tmp_path / d, (old, old))
 
     monkeypatch.setattr(ingest, "INGEST_ROOT", str(tmp_path))
-    base = os.path.basename(os.path.normpath(sf_dir))
-    stale = tmp_path / f"docs-{base}-deadbeefdeadbeef"
-    young = tmp_path / f"docs-{base}-cafecafecafecafe"
-    other = tmp_path / "docs-othersf-deadbeefdeadbeef"
-    timing = tmp_path / f"timing-{base}-{table_fingerprint(sf_dir, 'events')}"
-    near = tmp_path / f"near-{base}-deadbeefdeadbeef"
-    for d in (stale, young, other, timing, near):
-        d.mkdir()
-    old = time.time() - 3 * 3600
-    for d in (stale, other, timing, near):
-        os.utime(d, (old, old))
+    ingest.process_root()
+    assert sorted(os.listdir(tmp_path)) == sorted([young_live, young_family])
 
-    ingest.state_dirs("docs", sf_dir, "documents", "store")
-    assert not stale.exists(), "old different-fingerprint tag must be GC'd"
-    assert young.exists(), "young dirs may belong to a concurrent session"
-    assert other.exists(), "other corpus basenames are untouched"
-    assert timing.exists(), "another table's root is untouched"
-    assert near.exists(), "another family's root is untouched"
+
+def test_ingest_root_alone_moves_every_state_path(sf_dir, tmp_path, monkeypatch):
+    """Repointing ``ingest.INGEST_ROOT`` moves the ingest stores, the
+    event stage, the rollup stage and the PQ store under the new root —
+    nothing captured the /tmp default at import time."""
+    import pytest
+
+    from airflow_ml_pipeline_spark.operators import pq, temporal
+    from airflow_ml_pipeline_spark.streaming import sources
+
+    class _Built(Exception):
+        pass
+
+    rollup = []
+
+    def _record(spark, sf, out, cutoff):
+        rollup.append(out)
+        raise _Built
+
+    monkeypatch.setattr(ingest, "INGEST_ROOT", str(tmp_path))
+    monkeypatch.setattr(temporal, "materialize_hourly_rollup", _record)
+    with pytest.raises(_Built):
+        temporal.events_hourly_continuous(None, sf_dir)
+    root = ingest.process_root()
+    assert root.startswith(str(tmp_path) + "/"), root
+    for path in (
+        *ingest.state_dirs("timing", sf_dir, "events", "arrivals", "store"),
+        sources.stage_events_dir(sf_dir),
+        *rollup,
+        pq._pq_store_dir(sf_dir),
+    ):
+        assert path.startswith(root + "/"), path
 
 
 def test_table_fingerprint_tracks_file_versions(sf_dir, tmp_path):
@@ -175,27 +235,6 @@ def test_table_fingerprint_tracks_file_versions(sf_dir, tmp_path):
     assert table_fingerprint(d, "events") != ev
     with pytest.raises(ValueError, match="Unknown table"):
         table_fingerprint(d, "no_such_table")
-
-
-def test_state_roots_are_read_at_call_time(sf_dir, tmp_path, monkeypatch):
-    """Repointing the three state-root module attributes moves every
-    persisted ingest store, event stage and rollup stage under the new
-    root — nothing captured the /tmp default at import time."""
-    from airflow_ml_pipeline_spark.operators import temporal
-    from airflow_ml_pipeline_spark.streaming import sources
-
-    for mod, attr in (
-        (ingest, "INGEST_ROOT"),
-        (sources, "STAGE_ROOT"),
-        (temporal, "_ROLLUP_STAGE"),
-    ):
-        monkeypatch.setattr(mod, attr, str(tmp_path / attr))
-    for path in (
-        *ingest.state_dirs("timing", sf_dir, "events", "arrivals", "store"),
-        sources.stage_events_dir(sf_dir),
-        temporal._rollup_stage_dir(sf_dir),
-    ):
-        assert path.startswith(str(tmp_path) + "/"), path
 
 
 def test_funnel_rerun_is_stable_and_consistent(spark, sf_dir):

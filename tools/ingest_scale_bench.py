@@ -28,7 +28,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -136,7 +137,7 @@ def main() -> None:
         print(block)
         return
     marker = "### Streaming ingest: per-batch cost vs store size"
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(ROOT, "SCALING.md")) as f:
         text = f.read()
     if marker in text:  # replace the stale block (ends at next heading/EOF)
         start = text.index(marker)
@@ -144,7 +145,7 @@ def main() -> None:
         nxt2 = text.find("\n### ", start + len(marker))
         cut = min(x for x in (nxt, nxt2, len(text)) if x >= 0)
         text = text[:start].rstrip("\n") + "\n" + text[cut:]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write(text.rstrip("\n") + "\n" + block)
     print("SCALING.md updated")
 

@@ -9,10 +9,12 @@ Usage: python tools/scale_curve.py   (writes SCALING.md)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -378,14 +380,14 @@ def main() -> None:
     # edited in SCALING.md directly and must survive regeneration
     tail = FOOTER
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(os.path.join(ROOT, "SCALING.md")) as f:
             current = f.read()
         idx = current.find("\n## ")
         if idx >= 0:
             tail = current[idx:]
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n" + tail)
     print("wrote SCALING.md")
 
