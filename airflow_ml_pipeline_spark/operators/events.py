@@ -388,15 +388,25 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the partition key would be (event_type, day-bucket) with a
     per-bucket warm-up overlap — the standard time-sliced window
     parallelization); output is anomaly-sized, not event-sized. The
-    streaming twin of this plan is an ``applyInPandasWithState``
-    rolling buffer per event_type."""
+    streaming twin (``stream_anomaly_zscore``) runs this same kernel per
+    micro-batch over the batch plus the carried tail of each event_type."""
     ev = load_table(spark, sf_dir, "events")
-    return anomaly_zscore(ev)
+    return anomaly_scored(ev).select(
+        "event_id",
+        "event_type",
+        fmt_ts(F.col("ts")).alias("event_ts"),
+        "value",
+        "z",
+    )
 
 
-def anomaly_zscore(ev: DataFrame) -> DataFrame:
-    """The trailing-z-score kernel over any (event_id, event_type, ts,
-    value) frame — see ``events_anomaly_zscore`` for semantics."""
+def anomaly_scored(ev: DataFrame) -> DataFrame:
+    """The trailing-z-score kernel, stated once for the batch plan and its
+    streaming twin: the rows of ``ev`` (an event_id, event_type, ts, value
+    frame; other columns ride along) that score |z| > ANOMALY_Z against
+    the ANOMALY_BASELINE_ROWS rows before them in (ts, event_id) order
+    within their event_type, with the 6-dp ``z`` appended — see
+    ``events_anomaly_zscore`` for semantics."""
     dec = F.col("value").cast("decimal(18,6)")
     w = (
         Window.partitionBy("event_type")
@@ -404,28 +414,16 @@ def anomaly_zscore(ev: DataFrame) -> DataFrame:
         .rowsBetween(-ANOMALY_BASELINE_ROWS, -1)
     )
     scored = ev.select(
-        "event_id",
-        "event_type",
-        "ts",
-        "value",
+        *ev.columns,
         F.count(F.lit(1)).over(w).cast("double").alias("n"),
         F.sum(dec).over(w).cast("double").alias("s"),
         F.sum(dec * dec).over(w).cast("double").alias("ss"),
     )
     var = (F.col("ss") - F.col("s") * F.col("s") / F.col("n")) / (F.col("n") - 1)
     z = (F.col("value") - F.col("s") / F.col("n")) / F.sqrt(var)
-    return (
-        scored.filter(
-            (F.col("n") >= ANOMALY_MIN_BASELINE) & (var > 0) & (F.abs(z) > ANOMALY_Z)
-        )
-        .select(
-            "event_id",
-            "event_type",
-            fmt_ts(F.col("ts")).alias("event_ts"),
-            "value",
-            F.round(z, 6).alias("z"),
-        )
-    )
+    return scored.filter(
+        (F.col("n") >= ANOMALY_MIN_BASELINE) & (var > 0) & (F.abs(z) > ANOMALY_Z)
+    ).select(*ev.columns, F.round(z, 6).alias("z"))
 
 
 #: recursion cap for the linked-list walk — bounds both engines' CTE

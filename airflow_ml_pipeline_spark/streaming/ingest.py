@@ -137,11 +137,13 @@ def replay(
     checkpoint: str,
     batch_fn: Callable[[DataFrame, int], None],
     transform: Callable[[DataFrame], DataFrame] | None = None,
+    max_files: int | None = 1,
 ) -> None:
-    """Replay the staged ``arrivals`` as a parquet file stream, one file
-    per micro-batch, under Trigger.AvailableNow, into
-    ``batch_fn(batch_df, batch_id)``; ``transform`` first maps the raw
-    stream (a stateful operator, emitting in append mode). The checkpoint
+    """Replay the staged ``arrivals`` as a parquet file stream, ``max_files``
+    files per micro-batch (None: everything staged in one), under
+    Trigger.AvailableNow, into ``batch_fn(batch_df, batch_id)``;
+    ``transform`` first maps the raw stream (event-time normalization, or
+    a stateful operator emitting in append mode). The checkpoint
     remembers processed files, so a re-run over an unchanged table is a
     no-op. The trailing no-data batch is never skipped: it carries the
     final watermark advance.
@@ -151,12 +153,10 @@ def replay(
     locks one state store per shuffle partition in at query start, pure
     overhead on replay-sized input (results are partitioning-independent).
     """
-    stream = (
-        spark.readStream.schema(spark.read.parquet(arrivals).schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
-    )
+    reader = spark.readStream.schema(spark.read.parquet(arrivals).schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    stream = reader.format("parquet").load(arrivals)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -182,15 +182,25 @@ def write_batch(df: DataFrame, batch_id: int, store_dir: str) -> None:
     )
 
 
+def batches_before(store_dir: str, batch_id: int) -> list[int]:
+    """The batch ids of ``store_dir``'s partitions strictly before
+    ``batch_id`` — all a retried batch may read."""
+    if not os.path.isdir(store_dir):
+        return []
+    ids = (
+        int(d.split("=", 1)[1])
+        for d in os.listdir(store_dir)
+        if d.startswith("batch_id=")
+    )
+    return [b for b in ids if b < batch_id]
+
+
 def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFrame | None:
     """The store as of batches strictly BEFORE ``batch_id`` — the
     anti-join base that makes a retried batch idempotent."""
-    if not os.path.isdir(store_dir):
-        return None
     parts = [
-        os.path.join(store_dir, d)
-        for d in os.listdir(store_dir)
-        if d.startswith("batch_id=") and int(d.split("=", 1)[1]) < batch_id
+        os.path.join(store_dir, f"batch_id={b}")
+        for b in batches_before(store_dir, batch_id)
     ]
     if not parts:
         return None
@@ -612,18 +622,18 @@ def stream_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scrub-on-ingest: the TRANSFORM side of streaming ingestion (the funnel
 # above is the dedup/observe side). Each micro-batch runs the batch PII
 # kernel (operators/packing.py::pii_counted — stated once for batch,
-# report, and stream), writes the scrubbed docs to its own store
-# partition, and a 1-row stats partition last — same exactly-once layout
-# as the dedup ingester: a retried batch regenerates both, never
-# double-counts. Batch membership is the deterministic doc_id modulus
-# (shared staged arrivals), so every per-batch number is DuckDB-
-# restatable.
+# report, and stream) and writes the scrubbed docs, with their per-doc
+# counts, to its own store partition — same exactly-once layout as the
+# dedup ingester: a retried batch regenerates its partition, never
+# double-counts. The per-batch stats are an aggregate of the store. Batch
+# membership is the deterministic doc_id modulus (shared staged
+# arrivals), so every per-batch number is DuckDB-restatable.
 # ---------------------------------------------------------------------------
 
 
-def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
-    """foreachBatch body: scrub the batch with the shared PII kernel,
-    write scrubbed docs (own partition, overwrite), then the stats row."""
+def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str) -> None:
+    """foreachBatch body: scrub the batch with the shared PII kernel and
+    write the scrubbed docs to its own partition (overwrite)."""
     from airflow_ml_pipeline_spark.operators.packing import (
         PII_IDNUM,
         pii_counted,
@@ -635,31 +645,23 @@ def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) 
         "n_phones",
         "n_ids",
         F.md5(F.regexp_replace("t2", PII_IDNUM, "[ID]")).alias("scrubbed_md5"),
-    ).localCheckpoint(eager=True)  # consumed by the store write + stats agg
-    write_batch(counted, batch_id, store)
-    row = counted.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_emails").cast("bigint").alias("n_emails"),
-        F.sum("n_phones").cast("bigint").alias("n_phones"),
-        F.sum("n_ids").cast("bigint").alias("n_ids"),
     )
-    write_batch(row, batch_id, stats)
+    write_batch(counted, batch_id, store)
 
 
 def run_pii_scrub_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the modulus-staged corpus through the scrubbing ingester;
-    returns the stats directory. The arrivals are the funnel's (same
+    returns the store directory. The arrivals are the funnel's (same
     family root); this stream's own checkpoint tracks its progress."""
-    arrivals, store, stats, checkpoint = state_dirs(
-        "funnel", sf_dir, "documents",
-        "arrivals", "pii_store", "pii_stats", "pii_checkpoint",
+    arrivals, store, checkpoint = state_dirs(
+        "funnel", sf_dir, "documents", "arrivals", "pii_store", "pii_checkpoint"
     )
     stage_mod_batches(spark, sf_dir, arrivals, FUNNEL_N_BATCHES)
     replay(
         spark, arrivals, checkpoint,
-        lambda df, bid: pii_scrub_batch(df, bid, store, stats),
+        lambda df, bid: pii_scrub_batch(df, bid, store),
     )
-    return stats
+    return store
 
 
 def _pii_ingest_oracle() -> str:
@@ -682,26 +684,27 @@ def _pii_ingest_oracle() -> str:
 def stream_pii_scrub_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scrub-on-ingest: the streaming twin of `doc_pii_scrub` — every
     micro-batch is redacted with the SAME shared kernel the batch query
-    and the prevalence report use, scrubbed docs land exactly-once in a
-    per-batch store partition, and per-batch PII counters land beside
-    them — the compliance evidence trail ("batch k contained e/p/i hits
-    and was scrubbed before storage") regulators actually ask for.
-    Deterministic modulus batches make the whole per-batch report
-    DuckDB-restatable, like the ingest funnel.
+    and the prevalence report use, and the scrubbed docs land
+    exactly-once in a per-batch store partition with their per-doc PII
+    counts. The store is the compliance evidence trail ("batch k
+    contained e/p/i hits and was scrubbed before storage") regulators
+    actually ask for: the per-batch report is its ``GROUP BY batch_id``,
+    so no counter can drift from what was stored. Deterministic modulus
+    batches make the whole per-batch report DuckDB-restatable, like the
+    ingest funnel.
 
     Scale: stateless per-batch projection (no cross-batch state at all —
-    contrast the dedup ingester's fingerprint store); the stats table
-    grows 1 row per batch."""
-    stats = run_pii_scrub_ingest(spark, sf_dir)
+    contrast the dedup ingester's fingerprint store); the report is one
+    aggregate over the store."""
+    store = run_pii_scrub_ingest(spark, sf_dir)
     return (
-        spark.read.option("basePath", stats)
-        .parquet(stats)
-        .select(
-            F.col("batch_id").cast("bigint").alias("batch_id"),
-            "n_docs",
-            "n_emails",
-            "n_phones",
-            "n_ids",
+        spark.read.parquet(store)
+        .groupBy(F.col("batch_id").cast("bigint").alias("batch_id"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_emails").cast("bigint").alias("n_emails"),
+            F.sum("n_phones").cast("bigint").alias("n_phones"),
+            F.sum("n_ids").cast("bigint").alias("n_ids"),
         )
     )
 

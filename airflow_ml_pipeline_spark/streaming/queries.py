@@ -8,6 +8,8 @@ equivalence, the property Structured Streaming promises.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from airflow_ml_pipeline_spark.functions.compare import SQL_DSUM, SQL_TS
@@ -124,7 +126,7 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     # emits nothing — skipping it is output-identical (result-equality
     # test: tests/test_streaming.py::
     # test_skip_no_data_batch_changes_nothing_for_stateful_totals). Same
-    # class as the anomaly state machine / streaming dedup skips (r6).
+    # class as the streaming dedup skip (r6).
     return run_available_now(
         user_running_totals(stream),
         output_mode="update",
@@ -400,6 +402,71 @@ def stream_errors_before_purchase_outer(
     )
 
 
+_ANOMALY_OUT_SCHEMA = (
+    "event_id long, event_type string, ts_us long, value double, z double"
+)
+_ANOMALY_TAIL_SCHEMA = "event_id long, event_type string, ts timestamp, value double"
+
+
+def anomaly_batch(batch_df: DataFrame, batch_id: int, out: str, tail: str) -> None:
+    """foreachBatch body of ``stream_anomaly_zscore``: score the batch's
+    events with ``events.anomaly_scored`` over the batch plus the tail
+    partition of the greatest earlier batch (the last
+    ANOMALY_BASELINE_ROWS events per event_type before it), write the
+    batch's own anomalies to ``out/batch_id=N``, then the new tail to
+    ``tail/batch_id=N``. Both writes overwrite the batch's own partition
+    and only earlier partitions are read, so a retried batch rewrites
+    both identically. Arrivals must be in event-time order across
+    batches: the carried rows are assumed to precede every new one."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from airflow_ml_pipeline_spark.operators.events import anomaly_scored
+    from airflow_ml_pipeline_spark.streaming.ingest import (
+        batches_before,
+        write_batch,
+    )
+
+    spark = batch_df.sparkSession
+    cols = ["event_id", "event_type", "ts", "value"]
+    # both writes read the batch: cached, it is scanned (and counted as
+    # stream input) once
+    arrived = batch_df.select(*cols, F.lit(True).alias("new")).persist()
+    ev = arrived
+    earlier = batches_before(tail, batch_id)
+    if earlier:
+        carried = spark.read.schema(_ANOMALY_TAIL_SCHEMA).parquet(
+            os.path.join(tail, f"batch_id={max(earlier)}")
+        )
+        ev = ev.unionByName(carried.withColumn("new", F.lit(False)))
+    latest = Window.partitionBy("event_type").orderBy(
+        F.desc("ts"), F.desc("event_id")
+    )
+    try:
+        write_batch(
+            anomaly_scored(ev)
+            .filter("new")
+            .select(
+                "event_id",
+                "event_type",
+                F.unix_micros("ts").alias("ts_us"),
+                "value",
+                "z",
+            ),
+            batch_id,
+            out,
+        )
+        write_batch(
+            ev.withColumn("rn", F.row_number().over(latest))
+            .filter(F.col("rn") <= ANOMALY_BASELINE_ROWS)
+            .select(*cols),
+            batch_id,
+            tail,
+        )
+    finally:
+        arrived.unpersist()
+
+
 @query(
     "stream_anomaly_zscore",
     oracle=f"""
@@ -423,23 +490,38 @@ def stream_errors_before_purchase_outer(
     """,
 )
 def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The `events_anomaly_zscore` batch plan as a STREAMING state
-    machine (applyInPandasWithState): per-event-type bounded trailing
-    buffer, anomalies appended as they are detected — the deployment
-    shape where the tripwire actually lives (you don't re-scan history
-    to notice a spike). The pandas kernel replicates the batch twin's
-    decimal/double lattice exactly, so the AvailableNow replay matches
-    the SAME windowed-SQL oracle that checks the batch query — stream
-    and batch are interchangeable by construction, with state bounded
-    at O(event_types x 50) floats regardless of stream length."""
-    from airflow_ml_pipeline_spark.streaming.stateful import anomaly_zscore_stream
+    """The `events_anomaly_zscore` batch plan as a STREAMING tripwire:
+    anomalies are appended per micro-batch as they are detected — the
+    deployment shape where the tripwire actually lives (you don't re-scan
+    history to notice a spike). The events replay through the one ingest
+    skeleton (``ingest.replay`` over the events stage, event time
+    normalized at the scan boundary) into ``anomaly_batch``, which runs
+    the batch twin's own kernel (``events.anomaly_scored``) over the batch
+    plus the tail carried from the previous batch — one window/z
+    expression for both, no Python workers, and state bounded at
+    O(event_types x ANOMALY_BASELINE_ROWS) rows regardless of stream
+    length. The SAME windowed-SQL oracle checks stream and batch.
 
-    stream = read_events_stream(spark, sf_dir)
-    # NoTimeout state machine: anomalies emit inline on data batches,
-    # nothing is timeout- or watermark-gated — the trailing no-data
-    # batch is a pure state reload+commit and is skipped
-    return run_available_now(
-        anomaly_zscore_stream(stream),
-        output_mode="append",
-        skip_no_data_batch=True,
+    The events stage replays as ONE micro-batch however many files it
+    holds: split by file, a batch's rows could precede the carried tail
+    in event time. The tail carry itself is pinned against the batch twin
+    over time-ordered slices in tests/test_streaming.py."""
+    from airflow_ml_pipeline_spark.sources.catalog import normalize_event_time
+    from airflow_ml_pipeline_spark.streaming.ingest import replay, state_dirs
+    from airflow_ml_pipeline_spark.streaming.sources import stage_events_dir
+
+    out, tail, checkpoint = state_dirs(
+        "events", sf_dir, "events",
+        "anomaly_out", "anomaly_tail", "anomaly_checkpoint",
+    )
+    # a TIMESTAMP(NANOS) ts must read as bigint (normalize_event_time
+    # converts it) already when replay reads the stage's schema
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    replay(
+        spark, stage_events_dir(sf_dir), checkpoint,
+        lambda df, bid: anomaly_batch(df, bid, out, tail),
+        normalize_event_time, max_files=None,
+    )
+    return spark.read.schema(_ANOMALY_OUT_SCHEMA).parquet(out).select(
+        "event_id", "event_type", "ts_us", "value", "z"
     )

@@ -2,10 +2,14 @@
 requirement: arbitrary per-key state machines that windowed aggregates can't
 express).
 
-The demonstrator keeps per-user running (count, total, max) state across
-micro-batches and emits the updated snapshot each batch. With an
-AvailableNow replay the final emitted snapshot per user equals the batch
-aggregate — which is exactly how the declared query is oracle-checked.
+Two state machines live here: per-user running (count, total, max) state
+that emits the updated snapshot each batch — with an AvailableNow replay
+the final snapshot per user equals the batch aggregate, which is how the
+declared query is oracle-checked — also on the Spark 4
+``transformWithStateInPandas`` API; and a per-user gap sessionizer with an
+event-time timeout. A state machine whose per-batch step a windowed plan
+can express (the anomaly z-score tripwire) runs on the ingest skeleton
+instead, with no Python workers (``streaming/queries.py::anomaly_batch``).
 """
 
 from __future__ import annotations
@@ -112,134 +116,6 @@ def user_running_totals_tws(stream: DataFrame) -> DataFrame:
     )
 
 
-ANOMALY_OUT_SCHEMA = (
-    "event_id long, event_type string, ts_us long, value double, z double"
-)
-ANOMALY_STATE_SCHEMA = "buf array<double>"
-
-
-def _anomaly_zscores(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-event-type rolling-baseline anomaly scorer. State is the raw
-    trailing value buffer (bounded at ANOMALY_BASELINE_ROWS); arithmetic
-    REPLICATES the batch twin's lattice exactly — trailing values are
-    quantized to DECIMAL(.,6) with HALF_UP (what Spark's decimal cast
-    does to a double), summed exactly, converted to double, and the z
-    expression/rounding mirror the batch plan — so an AvailableNow
-    replay's emitted anomalies equal `events_anomaly_zscore` row-for-row
-    and the same DuckDB oracle checks both."""
-    import math
-    from collections import deque
-    from decimal import ROUND_HALF_UP, Decimal, localcontext
-
-    from airflow_ml_pipeline_spark.operators.events import (
-        ANOMALY_BASELINE_ROWS,
-        ANOMALY_MIN_BASELINE,
-        ANOMALY_Z,
-    )
-
-    six = Decimal("0.000001")
-    # bounded per row, not per batch: a long replay batch never holds more
-    # than the baseline window of raw values for a key
-    buf: deque[float] = deque(
-        state.get[0] if state.exists else (), maxlen=ANOMALY_BASELINE_ROWS
-    )
-    out: dict[str, list] = {k: [] for k in ("event_id", "event_type", "ts_us", "value", "z")}
-    # ONE sort over the whole micro-batch: applyInPandasWithState delivers a
-    # key's rows as multiple Arrow chunks in shuffle-arrival order, so
-    # sorting each chunk independently would feed the rolling buffer out of
-    # global time order whenever a batch spans >1 chunk (review finding)
-    chunks = [p for p in pdfs if len(p)]
-    batch = (
-        pd.concat(chunks).sort_values(["ts_us", "event_id"])
-        if chunks
-        else pd.DataFrame()
-    )
-    with localcontext() as ctx:
-        # the oracle/batch sums are DECIMAL(38,12)-exact; the default
-        # Python context (28 sig digits) could round a large
-        # sum-of-squares where Spark would not
-        ctx.prec = 50
-        # Decimal(repr(v)), NOT Decimal(v): Spark's double->decimal cast
-        # (and F.round) quantize the SHORTEST decimal rendering
-        # (BigDecimal.valueOf via Double.toString), not the exact binary
-        # expansion — repr() is Python's shortest rendering, so this
-        # walks the identical lattice (review finding; e.g. 5e-07:
-        # valueOf->0.000001, exact-binary->0.000000).
-        #
-        # INCREMENTAL running sums (r16 opt, guide §4): the quantized
-        # window values and their exact Decimal sum / sum-of-squares are
-        # maintained across rows — append adds (q, q²), eviction
-        # subtracts them. Decimal arithmetic at prec 50 is EXACT for
-        # these bounded 6-dp values, and exact addition/subtraction is
-        # order-independent, so the running sums are bit-identical to
-        # the previous shape's from-scratch re-quantize + re-sum of the
-        # whole buffer on EVERY row (O(rows × baseline) Decimal ops →
-        # O(rows); equality pinned by the stream-equals-batch oracle and
-        # tests/test_streaming.py).
-        qs = deque(
-            Decimal(repr(float(v))).quantize(six, ROUND_HALF_UP) for v in buf
-        )
-        s_dec = sum(qs, Decimal(0))
-        ss_dec = sum((q * q for q in qs), Decimal(0))
-        for r in batch.itertuples():
-            n = len(qs)
-            if n >= ANOMALY_MIN_BASELINE:
-                s = float(s_dec)
-                ss = float(ss_dec)
-                nn = float(n)
-                var = (ss - s * s / nn) / (nn - 1)
-                if var > 0:
-                    z = (r.value - s / nn) / math.sqrt(var)
-                    if abs(z) > ANOMALY_Z:
-                        out["event_id"].append(r.event_id)
-                        out["event_type"].append(key[0])
-                        out["ts_us"].append(r.ts_us)
-                        out["value"].append(r.value)
-                        out["z"].append(
-                            float(
-                                Decimal(repr(float(z))).quantize(
-                                    six, ROUND_HALF_UP
-                                )
-                            )
-                        )
-            buf.append(float(r.value))
-            q = Decimal(repr(float(r.value))).quantize(six, ROUND_HALF_UP)
-            qs.append(q)
-            s_dec += q
-            ss_dec += q * q
-            if len(qs) > ANOMALY_BASELINE_ROWS:
-                q0 = qs.popleft()
-                s_dec -= q0
-                ss_dec -= q0 * q0
-    state.update((list(buf),))
-    yield pd.DataFrame(out)
-
-
-def anomaly_zscore_stream(stream: DataFrame) -> DataFrame:
-    """Streaming anomaly detection: the `events_anomaly_zscore` batch
-    plan as a per-key state machine. Event time rides as unix MICROS
-    (integers are timezone-proof across the Arrow boundary); state per
-    event_type is one bounded float buffer, so store size is
-    O(types x baseline), independent of stream length."""
-    from pyspark.sql import functions as F
-
-    ev = stream.select(
-        "event_type",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "value",
-    )
-    return ev.groupBy("event_type").applyInPandasWithState(
-        _anomaly_zscores,
-        outputStructType=ANOMALY_OUT_SCHEMA,
-        stateStructType=ANOMALY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Event-time-timeout sessionizer (round 11, VERDICT r10 ask #5): the third
 # stateful state class — CUSTOM applyInPandasWithState state with an
@@ -263,8 +139,8 @@ def _gap_sessions(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Incremental gap sessionizer. The session value sum replicates the
-    SQL_DSUM lattice exactly (the anomaly-scorer recipe): each value is
-    quantized to DECIMAL(.,6) via Decimal(repr(v)) — Spark/DuckDB's
+    SQL_DSUM lattice exactly: each value is quantized to DECIMAL(.,6)
+    via Decimal(repr(v)) — Spark/DuckDB's
     shortest-rendering HALF_UP — summed exactly (the running sum crosses
     micro-batches as a STRING in state, never as a float), and converted
     to double only at emission. Rows of a batch are concatenated and

@@ -239,6 +239,51 @@ def test_prefix_sum_windows_stay_bucketed(spark, sf_dir):
     assert "event_type" in plan.split("Window")[1][:400], plan
 
 
+#: physical operators that ship rows across the JVM/Python boundary
+_PYTHON_EXECS = (
+    "FlatMapGroupsInPandasWithState",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+)
+
+
+def test_stream_anomaly_lineage_has_no_python_exec(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """stream_anomaly_zscore runs the batch twin's window kernel inside
+    the micro-batch, with no Python worker: no plan it runs — the stream
+    it starts, each frame a micro-batch writes, the frame it returns —
+    holds a Python exec node. A fresh state root makes the stream really
+    run instead of reading an earlier run's converged store."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from airflow_ml_pipeline_spark.streaming import ingest
+
+    monkeypatch.setattr(ingest, "INGEST_ROOT", str(tmp_path))
+    streams, writes = [], []
+
+    def spy(seen, method):
+        def wrapped(self, *args, **kwargs):
+            seen.append(_plan(self._df))
+            return method(self, *args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        DataStreamWriter, "start", spy(streams, DataStreamWriter.start)
+    )
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", spy(writes, DataFrameWriter.parquet)
+    )
+    result = registry.QUERIES["stream_anomaly_zscore"](spark, sf_dir)
+    for plan in streams + writes + [_plan(result)]:
+        assert not any(node in plan for node in _PYTHON_EXECS), plan
+    assert streams and result.count() > 0
+
+
 def test_bpe_encode_is_replace_chain_over_vocab(spark, sf_dir):
     """The encode stage must stay a literal string-replace chain (JVM
     codegen) over the distinct-word vocab — no higher-order aggregate

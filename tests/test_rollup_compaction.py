@@ -77,7 +77,7 @@ def test_anomaly_zscore_flags_planted_spike(spark):
     event; scoring starts only once the trailing baseline is full enough."""
     import datetime
 
-    from airflow_ml_pipeline_spark.operators.events import anomaly_zscore
+    from airflow_ml_pipeline_spark.operators.events import anomaly_scored
 
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
@@ -91,7 +91,7 @@ def test_anomaly_zscore_flags_planted_spike(spark):
         for i in range(10)
     ]
     ev = spark.createDataFrame(rows, ["event_id", "event_type", "ts", "value"])
-    out = anomaly_zscore(ev).collect()
+    out = anomaly_scored(ev).collect()
     assert [r.event_id for r in out] == [60]
     assert out[0].z > 3
 

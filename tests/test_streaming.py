@@ -193,8 +193,8 @@ def test_transform_with_state_totals(spark, sf_dir):
 
 
 def test_stream_anomaly_equals_batch_twin(spark, sf_dir):
-    """The stateful streaming anomaly detector reproduces the batch
-    windowed plan row-for-row (same ids, same 6-dp z) — stream/batch
+    """The streaming anomaly detector reproduces the batch windowed plan
+    row-for-row (same ids, same 6-dp z) — stream/batch
     interchangeability, the property the shared oracle also pins."""
     from airflow_ml_pipeline_spark.operators.events import events_anomaly_zscore
     from airflow_ml_pipeline_spark.streaming.queries import stream_anomaly_zscore
@@ -207,6 +207,61 @@ def test_stream_anomaly_equals_batch_twin(spark, sf_dir):
     }
     assert stream == batch
     assert stream, "the corpus produces tail anomalies"
+
+
+def test_stream_anomaly_tail_carry_equals_batch_twin(spark, sf_dir, tmp_path):
+    """Replayed as time-ordered slices, one micro-batch each, the anomaly
+    body carries each event_type's last ANOMALY_BASELINE_ROWS rows from
+    batch to batch: the output equals the batch twin, every tail
+    partition stays bounded, and re-running a batch rewrites both of its
+    partitions identically."""
+    from collections import Counter
+
+    from airflow_ml_pipeline_spark.operators.events import (
+        ANOMALY_BASELINE_ROWS,
+        events_anomaly_zscore,
+    )
+    from airflow_ml_pipeline_spark.streaming.ingest import (
+        SESSION_N_SLICES,
+        replay,
+        stage_time_slices,
+    )
+    from airflow_ml_pipeline_spark.streaming.queries import anomaly_batch
+
+    assert SESSION_N_SLICES >= 3
+    arrivals = stage_time_slices(spark, sf_dir, str(tmp_path / "arrivals"))
+    out, tail = str(tmp_path / "out"), str(tmp_path / "tail")
+    replay(
+        spark, arrivals, str(tmp_path / "checkpoint"),
+        lambda df, bid: anomaly_batch(df, bid, out, tail),
+    )
+    assert sorted(os.listdir(tail)) == [
+        f"batch_id={k}" for k in range(SESSION_N_SLICES)
+    ]
+
+    found = spark.read.parquet(out).collect()
+    batch = {
+        r.event_id: r.z for r in events_anomaly_zscore(spark, sf_dir).collect()
+    }
+    assert {r.event_id: r.z for r in found} == batch
+    assert any(r.batch_id > 0 for r in found), "no anomaly after batch 0"
+
+    for k in range(SESSION_N_SLICES):
+        per_type = Counter(
+            r.event_type
+            for r in spark.read.parquet(f"{tail}/batch_id={k}").collect()
+        )
+        assert per_type and max(per_type.values()) <= ANOMALY_BASELINE_ROWS
+
+    def partitions(k):
+        return [
+            sorted(map(tuple, spark.read.parquet(f"{d}/batch_id={k}").collect()))
+            for d in (out, tail)
+        ]
+
+    before = partitions(1)
+    anomaly_batch(spark.read.parquet(f"{arrivals}/batch-1.parquet"), 1, out, tail)
+    assert partitions(1) == before
 
 
 def test_skip_no_data_batch_changes_nothing_for_inner_join(spark, sf_dir):

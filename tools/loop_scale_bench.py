@@ -3,7 +3,8 @@ driver-stepped loop families (CC, PageRank, BPE, EM, the recursive walk)
 still run SLOWER on 32 cores than 8 at 10x the data, or was the sf0.1
 inversion pure fixed-cost domination?
 
-Builds a synthetic ~sf1 corpus under /tmp by replicating sf0.1 with
+Builds a synthetic 10x corpus under /tmp by replicating the
+``$SPARK_GRAFT_SF_DIR`` corpus (bench.py's default: sf0.1) with
 REPLICA-SALTED tokens: every token of replica r is suffixed ``_r``, so
 each replica reproduces the original corpus's near-dup graph EXACTLY
 (same shingle overlaps within a replica, zero shingle overlap across
@@ -28,7 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BASE = "/root/testdata/sf0.1"
+from bench import SF_DIR as BASE  # noqa: E402  ($SPARK_GRAFT_SF_DIR)
+
+#: the warm pass runs on the corpus's sf0.001 sibling
+WARM_SF = os.path.join(os.path.dirname(os.path.normpath(BASE)), "sf0.001")
 OUT = "/tmp/spark_graft_sf1_loops"
 REPLICAS = 10
 OFF = 10**7
@@ -92,7 +96,7 @@ def run(cpus: str) -> None:
     qs = entrymod.queries()
     # small warm pass (codegen classes) on the real sf0.001 corpus
     for name in LOOP_QUERIES:
-        qs[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
+        qs[name](spark, WARM_SF).write.format("noop").mode(
             "overwrite"
         ).save()
     results = []
