@@ -1412,7 +1412,12 @@ def winnow_md5_postings(
     32-char strings cost O(w) string compares per element in a slice
     transform, measured ~25x slower (see ``doc_winnowing_md5``). Docs with
     fewer than w hashes keep one window over what exists (the p=1 guard,
-    matching the oracle)."""
+    matching the oracle).
+
+    ``fp`` is the 16-byte binary md5, the one encoding of every consumer
+    (pair joins, stop list, the streaming store): binary orders by
+    unsigned bytes, so its window min picks the same fingerprint as the
+    oracle's string min over lowercase hex."""
     from pyspark.sql.window import Window
 
     n_hashes = F.greatest(F.length("text") - k + 1, F.lit(1))
@@ -1421,7 +1426,9 @@ def winnow_md5_postings(
         F.posexplode(F.sequence(F.lit(1), n_hashes)).alias("i", "p"),
         F.col("text"),
     ).select(
-        "doc_id", "p", F.md5(F.col("text").substr(F.col("p"), F.lit(k))).alias("h")
+        "doc_id",
+        "p",
+        F.unhex(F.md5(F.col("text").substr(F.col("p"), F.lit(k)))).alias("h"),
     )
     win = (
         Window.partitionBy("doc_id").orderBy("p").rowsBetween(Window.currentRow, w - 1)
@@ -1514,15 +1521,7 @@ def doc_containment_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is unreachable (same rationale as embedding_near_dup_pairs). This IS
     # the production shape at 100 TB: the fingerprint postings (~|text|/w
     # rows/doc) are materialized once and every downstream stage scans them.
-    # unhex the kernel's hex fps once before pinning: the fingerprint is
-    # internal here (pair join key only, never output), so the pinned
-    # postings, the df aggregate, and both pair-join sides all carry
-    # 16-byte binary instead of 32-char hex (§2.3 narrower types)
-    fps = (
-        winnow_md5_postings(docs)
-        .withColumn("fp", F.unhex("fp"))
-        .localCheckpoint(eager=True)
-    )
+    fps = winnow_md5_postings(docs).localCheckpoint(eager=True)
     rare = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= MAX_FP_DF
     )
@@ -1803,16 +1802,7 @@ def near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 10 >= 8)
     # the "store": winnowed postings of the historical corpus + its df
     # stats; materialized once (in production: a parquet artifact)
-    # unhex before pinning: fps are internal join keys here (the output
-    # is doc rows), so the store, stop list, and candidate join all
-    # carry 16-byte binary instead of 32-char hex (§2.3). The streaming
-    # twin keeps hex in its persisted artifacts (a store format choice);
-    # both twins run the same containment_dropped_ids rule.
-    hist_fps = (
-        winnow_md5_postings(hist)
-        .withColumn("fp", F.unhex("fp"))
-        .localCheckpoint(eager=True)
-    )
+    hist_fps = winnow_md5_postings(hist).localCheckpoint(eager=True)
     stop = stop_fps(hist_fps)
     hist_d = hist_fps.join(stop, "fp", "left_anti")
     # feeds sizes AND the candidate join: the lazy checkpoint still
@@ -1823,7 +1813,6 @@ def near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # models a production artifact and stays eager.
     batch_d = (
         winnow_md5_postings(batch)
-        .withColumn("fp", F.unhex("fp"))
         .join(stop, "fp", "left_anti")
         .localCheckpoint(eager=False)
     )

@@ -5,7 +5,7 @@ exists — the same bootstrap order as the coarse quantizer's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from airflow_ml_pipeline_spark.operators.similarity import ivf_assign
@@ -67,10 +67,3 @@ def build_pq_codebooks(
         books.append([[float(x) for x in c] for c in model.clusterCenters()])
     resid.unpersist()
     return books
-
-
-def pq_residual_frame(df: DataFrame, emb_col: str = "embedding") -> DataFrame:
-    """cluster_id + residual columns appended — the shared front half of
-    encode and train."""
-    a = ivf_assign(df, emb_col)
-    return a.select(*a.columns, residual_expr(emb_col).alias("r"))

@@ -396,37 +396,40 @@ def margin_fold(text: Column) -> Column:
 @query("stream_doc_quality_scores", oracle=_sql_quality_scores())
 def stream_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time quality scoring: the frozen model applied to a
-    REPLAYED document stream (the multi-file staging the dedup ingester
-    uses, one micro-batch per file) as a pure stateless projection — the
-    deployment shape where a curation pipeline actually filters, scoring
-    each document the micro-batch it arrives instead of re-scanning the
-    corpus. Same oracle as the batch `doc_quality_model_scores`: the
-    stream/batch equivalence check for model scoring.
+    REPLAYED document stream (the staged documents arrivals the exact,
+    near-dup, funnel and PII ingesters replay, one micro-batch per file)
+    as a pure stateless projection — the deployment shape where a
+    curation pipeline actually filters, scoring each document the
+    micro-batch it arrives instead of re-scanning the corpus. Each
+    micro-batch's scores land in its own ``batch_id=N`` store partition
+    (``ingest.write_batch``), and the result is a read of that store.
+    Same oracle as the batch `doc_quality_model_scores`: the stream/batch
+    equivalence check for model scoring.
 
     Scale: zero state stores, zero shuffles — the margin is a per-row
     fold (``margin_fold``), so throughput is bounded by scan + codegen
-    only and the no-data batch is safely skipped (nothing watermarked)."""
-    from airflow_ml_pipeline_spark.streaming.ingest import (
-        stage_documents_stream,
-    )
-    from airflow_ml_pipeline_spark.streaming.sources import run_available_now
+    only."""
+    from airflow_ml_pipeline_spark.streaming import ingest
 
-    arrivals = stage_documents_stream(spark, sf_dir)
-    schema = spark.read.parquet(arrivals).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(arrivals)
+    arrivals, store, checkpoint = ingest.state_dirs(
+        "docs", sf_dir, "documents",
+        "arrivals", "quality_store", "quality_checkpoint",
     )
+    ingest.stage_mod_batches(spark, sf_dir, arrivals)
     m = margin_fold(F.col("text"))
-    scored = stream.select(
-        "doc_id",
-        m.cast("double").alias("quality_margin"),
-        F.when(m > 0, F.lit(1)).otherwise(F.lit(0)).alias("pred_quality"),
+    ingest.replay(
+        spark, arrivals, checkpoint,
+        lambda df, bid: ingest.write_batch(
+            df.select(
+                "doc_id",
+                m.cast("double").alias("quality_margin"),
+                F.when(m > 0, F.lit(1)).otherwise(F.lit(0)).alias("pred_quality"),
+            ),
+            bid, store,
+        ),
     )
-    return run_available_now(
-        scored, output_mode="append", skip_no_data_batch=True
+    return spark.read.parquet(store).select(
+        "doc_id", "quality_margin", "pred_quality"
     )
 
 

@@ -342,12 +342,6 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, k: int = 16):
     return _IVF_INDEX[key]
 
 
-def drop_ivf_index(sf_dir: str) -> None:
-    """Release the cached index (unpersists the cluster-assigned frame)."""
-    for key in [k for k in _IVF_INDEX if k[0] == sf_dir]:
-        _IVF_INDEX.pop(key)[0].unpersist()
-
-
 IVF_NPROBE = 6
 
 

@@ -168,14 +168,6 @@ def _grid_combo_sklearn_names(grid_point, reverse: dict) -> dict:
     return out
 
 
-def count_combinations(param_grid: dict) -> int:
-    """Cartesian grid size (training.py:153-158)."""
-    count = 1
-    for values in param_grid.values():
-        count *= len(values)
-    return count
-
-
 def train_model(
     model_name: str,
     train_df: DataFrame,

@@ -14,13 +14,13 @@ batch function, its post-run check, its oracle and its query body:
   ``INGEST_ROOT``, removed at exit; ``<sf>`` is the sf_dir basename and
   ``<fp>`` the ``catalog.table_fingerprint`` of the table the family
   replays, so a regenerated table gets fresh arrivals, store and
-  checkpoint. Streams that share arrivals share a family (funnel and PII;
-  the four eviction-timing streams);
+  checkpoint. Streams that share arrivals share a family: ``docs`` (the
+  exact, quality, near-dup, funnel and PII streams), ``vec`` (semantic
+  dedup and PQ encode) and ``timing`` (the four eviction-timing streams);
 - a stager writes the arrivals once per table version through
-  ``_stage_single_file_batches``: micro-batch i's rows as ONE parquet
-  file, mtimes strictly ascending — so file i IS micro-batch i (the exact
-  ingester's ``stage_documents_stream`` range split is the one stager
-  whose batch boundaries no oracle states);
+  ``_stage_batches``, in one Spark write pass: micro-batch i's rows as
+  ONE parquet file, mtimes strictly ascending — so file i IS micro-batch
+  i;
 - ``replay`` runs the one AvailableNow file replay, one file per trigger,
   into the batch function (or into the sink ``write_batch`` behind a
   stateful ``transform``);
@@ -61,9 +61,9 @@ from pyspark.sql import functions as F
 
 from airflow_ml_pipeline_spark.plans.registry import query
 from airflow_ml_pipeline_spark.sources.catalog import load_table, table_fingerprint
+from airflow_ml_pipeline_spark.streaming.sources import STREAM_SHUFFLE_PARTITIONS
 
 INGEST_ROOT = "/tmp/spark_graft_ingest"
-N_STAGE_FILES = 4
 #: a foreign process root untouched this long is swept even if its pid
 #: probe says alive (a recycled pid would otherwise keep it forever)
 _MAX_AGE_S = 12 * 3600
@@ -148,8 +148,9 @@ def replay(
     no-op. The trailing no-data batch is never skipped: it carries the
     final watermark advance.
 
-    ``spark.sql.shuffle.partitions`` is scoped to 8 for the stream's
-    duration, as ``sources.run_available_now`` does: a stateful stream
+    ``spark.sql.shuffle.partitions`` is scoped to
+    ``STREAM_SHUFFLE_PARTITIONS`` for the stream's duration, as
+    ``sources.run_available_now`` does: a stateful stream
     locks one state store per shuffle partition in at query start, pure
     overhead on replay-sized input (results are partitioning-independent).
     """
@@ -158,7 +159,7 @@ def replay(
         reader = reader.option("maxFilesPerTrigger", max_files)
     stream = reader.format("parquet").load(arrivals)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
         if transform is not None:
             stream = transform(stream)
@@ -207,30 +208,43 @@ def store_before(spark: SparkSession, store_dir: str, batch_id: int) -> DataFram
     return spark.read.option("basePath", store_dir).parquet(*parts)
 
 
-def _stage_single_file_batches(
-    arrivals: str, make_batches: Callable[[], list[DataFrame]]
+def _stage_batches(
+    arrivals: str, n: int, build: Callable[[], DataFrame]
 ) -> str:
-    """Stage the frames of ``make_batches()`` as the arrivals of one
-    replay: frame i becomes ONE parquet file ``batch-i.parquet`` with
-    strictly increasing mtimes AND sorted names, so the file source's
-    (mtime, path) ordering replays them as micro-batches 0..N-1
-    deterministically. Idempotent: with the ``_staged`` marker (written
-    last) present, ``make_batches`` (and any eager job or guard in it)
-    never runs."""
+    """Stage ``build()`` — one frame with an int ``batch`` column — as the
+    arrivals of one replay, in ONE write pass: the rows of batch i become
+    ONE parquet file ``batch-i.parquet`` (without the ``batch`` column),
+    with strictly increasing mtimes AND sorted names, so the file
+    source's (mtime, path) ordering replays them as micro-batches 0..n-1
+    deterministically. Raises unless the pass wrote exactly the batches
+    0..n-1 (a batch numbering that skips a value, or leaves [0, n), would
+    shift every oracle's batch arithmetic). Idempotent: with the
+    ``_staged`` marker (written last) present, ``build`` (and any eager
+    job or guard in it) never runs."""
     marker = os.path.join(arrivals, "_staged")
     if os.path.exists(marker):
         return arrivals
-    batches = make_batches()
-    os.makedirs(arrivals, exist_ok=True)
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(arrivals, f"part{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
+    frame = build()
+    written = os.path.join(arrivals, "_pass")
+    # hash-partitioning on batch puts every batch's rows in one task, and
+    # one task writes one file per partitionBy value
+    frame.repartition(n, "batch").write.mode("overwrite").partitionBy(
+        "batch"
+    ).parquet(written)
+    dirs = sorted(d for d in os.listdir(written) if d.startswith("batch="))
+    if dirs != sorted(f"batch={i}" for i in range(n)):
+        shutil.rmtree(arrivals, ignore_errors=True)
+        raise ValueError(
+            f"staging {arrivals}: wrote batches {[d[6:] for d in dirs]},"
+            f" not exactly 0..{n - 1}"
+        )
+    for i in range(n):
+        (src,) = glob.glob(os.path.join(written, f"batch={i}", "part-*.parquet"))
         dst = os.path.join(arrivals, f"batch-{i}.parquet")
         os.rename(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
         t = time.time() + i
         os.utime(dst, (t, t))
+    shutil.rmtree(written)
     with open(marker, "w") as f:
         f.write("ok")
     return arrivals
@@ -254,21 +268,23 @@ def _assert_batches(
         )
 
 
-def stage_documents_stream(spark: SparkSession, sf_dir: str) -> str:
-    """Split the static documents table into N_STAGE_FILES range-partitioned
-    parquet files so the file source genuinely replays multiple
-    micro-batches (idempotent per corpus version). The exact ingester and
-    ``stream_doc_quality_scores`` replay these arrivals."""
-    (arrivals,) = state_dirs("docs", sf_dir, "documents", "arrivals")
-    marker = os.path.join(arrivals, "_staged")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        docs.repartitionByRange(N_STAGE_FILES, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(arrivals)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return arrivals
+#: micro-batches of the one documents arrivals set: batch i = doc_id % N
+DOC_N_BATCHES = 4
+
+
+def stage_mod_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
+    """Stage the documents as DOC_N_BATCHES single-file arrivals where
+    file i holds doc_id % N == i, so micro-batch i IS modulus class i and
+    every per-batch number is a pure function of the data — the property
+    the oracles' batch arithmetic states. The exact, quality, near-dup,
+    funnel and PII streams all replay these arrivals (``"docs"`` family,
+    one checkpoint and store each)."""
+    return _stage_batches(
+        arrivals, DOC_N_BATCHES,
+        lambda: load_table(spark, sf_dir, "documents").withColumn(
+            "batch", (F.col("doc_id") % DOC_N_BATCHES).cast("int")
+        ),
+    )
 
 
 def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
@@ -288,12 +304,12 @@ def upsert_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
 
 
 def run_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the corpus through the streaming dedup ingester (one
-    range-staged file per micro-batch) and return the store directory."""
-    store, checkpoint = state_dirs(
-        "docs", sf_dir, "documents", "store", "checkpoint"
+    """Replay the staged documents through the streaming dedup ingester
+    and return the store directory."""
+    arrivals, store, checkpoint = state_dirs(
+        "docs", sf_dir, "documents", "arrivals", "exact_store", "exact_checkpoint"
     )
-    arrivals = stage_documents_stream(spark, sf_dir)
+    stage_mod_batches(spark, sf_dir, arrivals)
     replay(spark, arrivals, checkpoint, lambda df, bid: upsert_batch(df, bid, store))
     return store
 
@@ -329,24 +345,6 @@ def stream_dedup_ingest_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seen-content postings store (the near-dup upgrade of the exact ingester
 # above, composing streaming/ingest with operators/dedup's winnowing kernel).
 # ---------------------------------------------------------------------------
-
-NEAR_N_BATCHES = 4
-
-
-def stage_mod_batches(
-    spark: SparkSession, sf_dir: str, arrivals: str, n: int
-) -> str:
-    """Stage the documents as ``n`` single-file arrivals where file i
-    holds doc_id % n == i, so micro-batch i IS modulus class i and every
-    per-batch number is a pure function of the data — the property the
-    oracles' batch arithmetic states."""
-
-    def batches() -> list[DataFrame]:
-        docs = load_table(spark, sf_dir, "documents")
-        return [docs.filter(F.col("doc_id") % n == i) for i in range(n)]
-
-    return _stage_single_file_batches(arrivals, batches)
-
 
 def upsert_near_batch(
     batch_df: DataFrame, batch_id: int, store_dir: str, out_dir: str, stop_dir: str
@@ -399,10 +397,10 @@ def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
     )
 
     arrivals, store, checkpoint, survivors, stop_dir = state_dirs(
-        "near", sf_dir, "documents",
-        "arrivals", "store", "checkpoint", "survivors", "stop_fps",
+        "docs", sf_dir, "documents",
+        "arrivals", "near_store", "near_checkpoint", "near_survivors", "stop_fps",
     )
-    stage_mod_batches(spark, sf_dir, arrivals, NEAR_N_BATCHES)
+    stage_mod_batches(spark, sf_dir, arrivals)
     if not os.path.exists(os.path.join(stop_dir, "_SUCCESS")):
         docs = load_table(spark, sf_dir, "documents")
         stop_fps(winnow_md5_postings(docs)).write.mode("overwrite").parquet(
@@ -413,7 +411,7 @@ def run_near_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
         lambda df, bid: upsert_near_batch(df, bid, store, survivors, stop_dir),
     )
     _assert_batches(
-        spark, store, F.col("doc_id") % NEAR_N_BATCHES, "near-dup ingest"
+        spark, store, F.col("doc_id") % DOC_N_BATCHES, "near-dup ingest"
     )
     return survivors
 
@@ -447,7 +445,7 @@ def _near_ingest_oracle() -> str:
         WHERE p <= n_h - {WINNOW_W} + 1 OR p = 1
     ),
     stop AS (SELECT fp FROM all_fps GROUP BY fp HAVING COUNT(*) > {MAX_FP_DF}),
-    b AS (SELECT doc_id, fp, doc_id % {NEAR_N_BATCHES} AS batch FROM all_fps
+    b AS (SELECT doc_id, fp, doc_id % {DOC_N_BATCHES} AS batch FROM all_fps
           WHERE fp NOT IN (SELECT fp FROM stop)),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM b GROUP BY doc_id),
     shared AS (SELECT x.doc_id AS d, h.doc_id AS hd, COUNT(*) AS c
@@ -474,7 +472,7 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingester (``stream_dedup_ingest_fps``) as the byte-identity backstop.
 
     Determinism contract the oracle states: arrivals are staged so batch i
-    holds doc_id % {NEAR_N_BATCHES} == i (mtime+name ordered, asserted
+    holds doc_id % {DOC_N_BATCHES} == i (mtime+name ordered, asserted
     after the run), the stop-fingerprint list is a standing whole-corpus
     artifact, and suppression is judged against ALL earlier-seen content
     (kept or dropped) — so survivor choice needs no recursive
@@ -498,9 +496,6 @@ def stream_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch k's membership is a pure function of the data and the whole
 # per-batch report is DuckDB-restatable.
 # ---------------------------------------------------------------------------
-
-FUNNEL_N_BATCHES = 4
-
 
 def funnel_batch(batch_df: DataFrame, batch_id: int, store: str, stats: str) -> None:
     """foreachBatch body: compute the batch's funnel counters, upsert the
@@ -547,10 +542,10 @@ def run_funnel_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the modulus-staged corpus through the funnel ingester;
     returns the stats directory."""
     arrivals, store, stats, checkpoint = state_dirs(
-        "funnel", sf_dir, "documents",
+        "docs", sf_dir, "documents",
         "arrivals", "funnel_store", "funnel_stats", "funnel_checkpoint",
     )
-    stage_mod_batches(spark, sf_dir, arrivals, FUNNEL_N_BATCHES)
+    stage_mod_batches(spark, sf_dir, arrivals)
     replay(
         spark, arrivals, checkpoint,
         lambda df, bid: funnel_batch(df, bid, store, stats),
@@ -563,7 +558,7 @@ def _funnel_oracle() -> str:
 
     return f"""
     WITH a AS (
-        SELECT doc_id, text, doc_id % {FUNNEL_N_BATCHES} AS b FROM documents
+        SELECT doc_id, text, doc_id % {DOC_N_BATCHES} AS b FROM documents
     ),
     w AS (
         SELECT b, md5(text) AS fp, MIN(doc_id) AS doc_id
@@ -650,13 +645,12 @@ def pii_scrub_batch(batch_df: DataFrame, batch_id: int, store: str) -> None:
 
 
 def run_pii_scrub_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Replay the modulus-staged corpus through the scrubbing ingester;
-    returns the store directory. The arrivals are the funnel's (same
-    family root); this stream's own checkpoint tracks its progress."""
+    """Replay the staged documents through the scrubbing ingester;
+    returns the store directory."""
     arrivals, store, checkpoint = state_dirs(
-        "funnel", sf_dir, "documents", "arrivals", "pii_store", "pii_checkpoint"
+        "docs", sf_dir, "documents", "arrivals", "pii_store", "pii_checkpoint"
     )
-    stage_mod_batches(spark, sf_dir, arrivals, FUNNEL_N_BATCHES)
+    stage_mod_batches(spark, sf_dir, arrivals)
     replay(
         spark, arrivals, checkpoint,
         lambda df, bid: pii_scrub_batch(df, bid, store),
@@ -670,7 +664,7 @@ def _pii_ingest_oracle() -> str:
     )
 
     return f"""
-    WITH {SQL_PII_COUNTED_CTES(f"doc_id % {FUNNEL_N_BATCHES}")}
+    WITH {SQL_PII_COUNTED_CTES(f"doc_id % {DOC_N_BATCHES}")}
     SELECT CAST(k AS BIGINT) AS batch_id,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_emails) AS BIGINT) AS n_emails,
@@ -750,14 +744,11 @@ def stage_time_slices(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
     order, so micro-batch k IS time-range k and the per-batch watermark
     becomes a pure function of the slice maxima."""
 
-    def batches() -> list[DataFrame]:
-        sliced = _time_sliced(spark, sf_dir, SESSION_N_SLICES)
-        return [
-            sliced.filter(F.col("slice") == k).drop("slice")
-            for k in range(SESSION_N_SLICES)
-        ]
-
-    return _stage_single_file_batches(arrivals, batches)
+    return _stage_batches(
+        arrivals, SESSION_N_SLICES,
+        lambda: _time_sliced(spark, sf_dir, SESSION_N_SLICES)
+        .withColumnRenamed("slice", "batch"),
+    )
 
 
 def _run_timing(
@@ -1122,33 +1113,26 @@ def stage_dedup_slices(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
     first-PROCESSED row of a key within a micro-batch (partition order —
     not restatable), so the fixture guarantees each key arrives at most
     once per batch and every emission's ts is pinned. These arrivals are
-    not the session slices for the same reason."""
+    not the session slices for the same reason. An empty slice (a
+    changed corpus) would shift the oracle's batch mapping, so the
+    staging pass's batch check raises on it."""
     from pyspark.sql import Window
 
-    def batches() -> list[DataFrame]:
+    def build() -> DataFrame:
         sliced = _time_sliced(spark, sf_dir, DEDUP_N_SLICES)
         w = Window.partitionBy("user_id", "event_type", "slice").orderBy(
             "ts", "event_id"
         )
-        staged = (
+        return (
             sliced.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select("user_id", "event_type", "event_id", "ts", "slice")
+            .select(
+                "user_id", "event_type", "event_id", "ts",
+                F.col("slice").alias("batch"),
+            )
         )
-        parts = []
-        for k in range(DEDUP_N_SLICES):
-            part_df = staged.filter(F.col("slice") == k).drop("slice")
-            if part_df.limit(1).count() == 0:
-                # batch numbering = slice numbering requires every slice
-                # to exist; an empty time-range means the corpus changed
-                raise ValueError(
-                    f"dedup-timing slice {k} of {DEDUP_N_SLICES} is empty "
-                    f"for {sf_dir} — oracle batch mapping would shift"
-                )
-            parts.append(part_df)
-        return parts
 
-    return _stage_single_file_batches(arrivals, batches)
+    return _stage_batches(arrivals, DEDUP_N_SLICES, build)
 
 
 def _dedup_timing_oracle() -> str:
@@ -1296,20 +1280,18 @@ def _dense_vec_ids(emb: DataFrame, what: str) -> int:
     """Row count of ``emb``, after checking its vec_ids are dense 0..n-1.
 
     Completeness guard (ADVICE r13): batch index = vec_id * N // n_total
-    lands in [0, N) iff vec_id is in [0, n_total) — a non-dense corpus
-    with any vec_id outside that range would silently stage NOTHING for
-    that vector and only surface later as an oracle mismatch, so fail
-    loudly at staging time instead. NULL vec_ids are the same silent-drop
-    class (both range predicates evaluate to NULL), hence the isNull arm."""
-    n_total = emb.count()
-    oob = emb.filter(
-        F.col("vec_id").isNull()
-        | (F.col("vec_id") < 0)
-        | (F.col("vec_id") >= n_total)
-    ).count()
-    if oob:
+    lands in [0, N) iff vec_id is in [0, n_total). The staging pass's
+    batch check catches a vec_id at or past n_total (batch >= N) and a
+    NULL one (NULL batch), but a small negative vec_id truncates into
+    batch 0 and would only surface later as an oracle mismatch — so fail
+    loudly at staging time, from one aggregate."""
+    n_total, n_ids, lo, hi = emb.agg(
+        F.count(F.lit(1)), F.count("vec_id"), F.min("vec_id"), F.max("vec_id")
+    ).first()
+    if n_ids < n_total or (n_total and (lo < 0 or hi >= n_total)):
         raise RuntimeError(
-            f"{what} staging: {oob} vec_ids outside [0, {n_total})"
+            f"{what} staging: vec_ids span [{lo}, {hi}] with"
+            f" {n_total - n_ids} NULL over {n_total} rows"
             " — range staging requires dense 0..n-1 vec_ids"
         )
     return n_total
@@ -1323,15 +1305,15 @@ def stage_range_vec_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> 
     makes the streaming suppressed-set EQUAL the batch twin's
     keep-priority rule (nn_id < vec_id) exactly — the metamorphic
     convergence pin tests/test_stream_semantic.py asserts. The semantic
-    dedup and PQ encode ingesters each stage these ranges under their own
-    root."""
+    dedup and PQ encode ingesters both replay these arrivals (``"vec"``
+    family, one checkpoint and store each)."""
 
-    def batches() -> list[DataFrame]:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
-        b = _range_batch(_dense_vec_ids(emb, "semantic ingest"), SEM_N_BATCHES)
-        return [emb.filter(b == i) for i in range(SEM_N_BATCHES)]
+        n_total = _dense_vec_ids(emb, "semantic ingest")
+        return emb.withColumn("batch", _range_batch(n_total, SEM_N_BATCHES))
 
-    return _stage_single_file_batches(arrivals, batches)
+    return _stage_batches(arrivals, SEM_N_BATCHES, build)
 
 
 def upsert_sem_batch(
@@ -1396,7 +1378,8 @@ def run_sem_dedup_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the embeddings corpus through the streaming semantic-dedup
     ingester and return the survivors directory."""
     arrivals, store, checkpoint, survivors = state_dirs(
-        "sem", sf_dir, "embeddings", "arrivals", "store", "checkpoint", "survivors"
+        "vec", sf_dir, "embeddings",
+        "arrivals", "sem_store", "sem_checkpoint", "sem_survivors",
     )
     stage_range_vec_batches(spark, sf_dir, arrivals)
     replay(
@@ -1527,13 +1510,11 @@ def upsert_pq_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
 
 def run_pq_encode_ingest(spark: SparkSession, sf_dir: str) -> str:
     """Replay the embeddings corpus through the streaming PQ encoder and
-    return the coded-store directory. Its arrivals are a second staging of
-    the semantic-dedup ranges, deliberately NOT shared (r14 review): each
-    family's checkpoint records its own source path, so sharing would
-    couple their replay lifecycles for the price of a few MB of one-time
-    staging on these corpora."""
+    return the coded-store directory. It replays the semantic-dedup
+    ingester's range-staged arrivals: once staged they never change, so
+    each stream's own checkpoint is all that separates the two replays."""
     arrivals, store, checkpoint = state_dirs(
-        "pqe", sf_dir, "embeddings", "arrivals", "store", "checkpoint"
+        "vec", sf_dir, "embeddings", "arrivals", "pqe_store", "pqe_checkpoint"
     )
     stage_range_vec_batches(spark, sf_dir, arrivals)
     replay(spark, arrivals, checkpoint, lambda df, bid: upsert_pq_batch(df, bid, store))
@@ -1694,25 +1675,21 @@ def stage_delete_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str
     file i micro-batch i, the property the oracle's batch arithmetic
     states."""
 
-    def batches() -> list[DataFrame]:
-        docs = load_table(spark, sf_dir, "documents")
-        mod = F.col("doc_id") % 4
-        slots = {
-            b: docs.filter(mod == m).select(
-                "doc_id", "text", F.lit("add").alias("op")
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        adds = docs.select(
+            "*", F.lit("add").alias("op"),
+            F.expr(DEL_ADD_CASE).alias("batch"),
+        )
+        dels = [
+            docs.filter(F.expr(rule)).select(
+                "*", F.lit("del").alias("op"), F.lit(b).alias("batch")
             )
-            for m, b in DEL_ADD_BATCH.items()
-        }
-        slots[1] = docs.filter(F.expr(DEL_RULE_B1)).select(
-            "doc_id", "text", F.lit("del").alias("op")
-        )
-        slots[3] = docs.filter(F.expr(DEL_RULE_B3)).select(
-            "doc_id", "text", F.lit("del").alias("op")
-        )
-        assert sorted(slots) == list(range(DEL_N_BATCHES))
-        return [slots[i] for i in range(DEL_N_BATCHES)]
+            for b, rule in ((1, DEL_RULE_B1), (3, DEL_RULE_B3))
+        ]
+        return adds.unionByName(dels[0]).unionByName(dels[1])
 
-    return _stage_single_file_batches(arrivals, batches)
+    return _stage_batches(arrivals, DEL_N_BATCHES, build)
 
 
 def _live_fps(store_df: DataFrame) -> DataFrame:
@@ -1873,36 +1850,45 @@ def stream_store_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 PQD_QUARTERS = 4
 
 
+def _pqd_quarter(n_total: int) -> str:
+    """A vector's range quarter (its add-schedule slot) as SQL: the
+    ``_range_batch`` arithmetic over PQD_QUARTERS."""
+    return f"CAST(vec_id * {PQD_QUARTERS} / {n_total} AS INT)"
+
+
 def stage_pq_delete_batches(spark: SparkSession, sf_dir: str, arrivals: str) -> str:
     """Stage the add/delete schedule as DEL_N_BATCHES single-file arrivals
     of (vec_id, label, embedding, op), file i = micro-batch i. Delete
     events carry only the key (label/embedding NULL): a deletion request
     references the indexed vector, not its payload."""
 
-    def batches() -> list[DataFrame]:
+    def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "label", "embedding"
         )
-        q = _range_batch(_dense_vec_ids(emb, "pq delete"), PQD_QUARTERS)
+        quarter = _pqd_quarter(_dense_vec_ids(emb, "pq delete"))
+        q = F.expr(quarter)
         nulls = [
             F.lit(None).cast(emb.schema["label"].dataType).alias("label"),
             F.lit(None).cast(emb.schema["embedding"].dataType).alias("embedding"),
         ]
-        slots = {
-            b: emb.filter(q == m).select("*", F.lit("add").alias("op"))
-            for m, b in DEL_ADD_BATCH.items()
-        }
+        adds = emb.select(
+            "*", F.lit("add").alias("op"),
+            F.expr(del_add_case(quarter)).alias("batch"),
+        )
         # the same two rules as the fingerprint schedule, over vec_id/quarter
-        slots[1] = emb.filter((q == 0) & (F.col("vec_id") % 3 == 0)).select(
-            "vec_id", *nulls, F.lit("del").alias("op")
-        )
-        slots[3] = emb.filter((q <= 1) & (F.col("vec_id") % 5 == 2)).select(
-            "vec_id", *nulls, F.lit("del").alias("op")
-        )
-        assert sorted(slots) == list(range(DEL_N_BATCHES))
-        return [slots[i] for i in range(DEL_N_BATCHES)]
+        dels = [
+            emb.filter(cond).select(
+                "vec_id", *nulls, F.lit("del").alias("op"), F.lit(b).alias("batch")
+            )
+            for b, cond in (
+                (1, (q == 0) & (F.col("vec_id") % 3 == 0)),
+                (3, (q <= 1) & (F.col("vec_id") % 5 == 2)),
+            )
+        ]
+        return adds.unionByName(dels[0]).unionByName(dels[1])
 
-    return _stage_single_file_batches(arrivals, batches)
+    return _stage_batches(arrivals, DEL_N_BATCHES, build)
 
 
 def apply_pq_delete_batch(
@@ -1972,10 +1958,9 @@ def run_pq_delete_ingest(spark: SparkSession, sf_dir: str) -> str:
         lambda df, bid: apply_pq_delete_batch(df, bid, store),
     )
     n_total = load_table(spark, sf_dir, "embeddings").count()
-    quarter = f"CAST(vec_id * {PQD_QUARTERS} / {n_total} AS INT)"
     _assert_batches(
         spark, store,
-        F.when(F.col("op") == "add", F.expr(del_add_case(quarter))),
+        F.when(F.col("op") == "add", F.expr(del_add_case(_pqd_quarter(n_total)))),
         "pq delete ingest",
     )
     return store

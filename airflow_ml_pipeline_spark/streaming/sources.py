@@ -56,12 +56,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _COUNTER = {"n": 0}
+#: ``spark.sql.shuffle.partitions`` for the duration of every stream
+#: (``run_available_now`` here, ``ingest.replay``): see run_available_now
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def run_available_now(
     stream_df: DataFrame,
     output_mode: str = "complete",
-    shuffle_partitions: int = 8,
     skip_no_data_batch: bool = False,
     collect_progress: list | None = None,
 ) -> DataFrame:
@@ -113,7 +115,7 @@ def run_available_now(
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     if skip_no_data_batch:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:

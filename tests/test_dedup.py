@@ -461,7 +461,9 @@ def test_winnow_md5_postings_match_reference(spark, texts):
     """The winnowing algebra itself (not just its DuckDB restatement):
     distinct min-of-each-w-window fingerprints per doc must match a pure
     Python implementation, including the p=1 guard for docs with fewer
-    than w hashes and docs shorter than k (single degenerate gram)."""
+    than w hashes and docs shorter than k (single degenerate gram). The
+    kernel's binary fps must pick the same minima as a string min over
+    hex digests."""
     import hashlib
 
     k, w = dedup.WINNOW_K, dedup.WINNOW_W
@@ -481,7 +483,7 @@ def test_winnow_md5_postings_match_reference(spark, texts):
     )
     got: dict[int, set] = {}
     for r in dedup.winnow_md5_postings(docs).collect():
-        got.setdefault(r.doc_id, set()).add(r.fp)
+        got.setdefault(r.doc_id, set()).add(bytes(r.fp).hex())
     expected = {i: ref(t) for i, t in texts_map.items()}
     assert got == expected
 
@@ -510,9 +512,8 @@ def test_containment_dropped_ids_threshold_semantics(spark):
 
 
 def test_containment_dropped_ids_rejects_mixed_fp_encodings(spark):
-    """A binary-fp batch against a hex-fp store (the batch twin's postings
-    vs the streaming store's format) must raise, not join zero rows: the
-    same fingerprints encoded two ways never compare equal."""
+    """A binary-fp batch against a hex-fp store must raise, not join zero
+    rows: the same fingerprints encoded two ways never compare equal."""
     hist = spark.createDataFrame(
         [(100, i) for i in range(10)], ["doc_id", "i"]
     ).select("doc_id", F.md5(F.col("i").cast("string")).alias("fp"))

@@ -16,7 +16,7 @@ from airflow_ml_pipeline_spark.streaming import ingest
 
 def _fresh(spark, sf_dir):
     arrivals, store, checkpoint = ingest.state_dirs(
-        "docs", sf_dir, "documents", "arrivals", "store", "checkpoint"
+        "docs", sf_dir, "documents", "arrivals", "exact_store", "exact_checkpoint"
     )
     for d in (store, checkpoint):
         shutil.rmtree(d, ignore_errors=True)
@@ -106,9 +106,9 @@ def test_near_dup_ingest_replay_and_batch_semantics(spark, sf_dir):
     all_ids = {
         r.doc_id for r in load_table(spark, sf_dir, "documents").select("doc_id").collect()
     }
-    batch0 = {i for i in all_ids if i % ingest.NEAR_N_BATCHES == 0}
+    batch0 = {i for i in all_ids if i % ingest.DOC_N_BATCHES == 0}
     assert batch0 <= surv1
-    assert all(i % ingest.NEAR_N_BATCHES != 0 for i in all_ids - surv1)
+    assert all(i % ingest.DOC_N_BATCHES != 0 for i in all_ids - surv1)
 
 
 _STATE_DIRS_SCRIPT = """
@@ -243,14 +243,14 @@ def test_funnel_rerun_is_stable_and_consistent(spark, sf_dir):
     and per-batch counters obey the funnel ordering."""
     from airflow_ml_pipeline_spark.sources.catalog import load_table
     from airflow_ml_pipeline_spark.streaming.ingest import (
-        FUNNEL_N_BATCHES,
+        DOC_N_BATCHES,
         stream_ingest_funnel,
     )
 
     r1 = sorted(map(tuple, stream_ingest_funnel(spark, sf_dir).collect()))
     r2 = sorted(map(tuple, stream_ingest_funnel(spark, sf_dir).collect()))
     assert r1 == r2
-    assert len(r1) == FUNNEL_N_BATCHES
+    assert len(r1) == DOC_N_BATCHES
     n_docs = load_table(spark, sf_dir, "documents").count()
     assert sum(r[1] for r in r1) == n_docs
     for batch_id, n_arr, n_gate, n_uniq, n_new in r1:
@@ -411,3 +411,102 @@ def test_asof_view_relates_to_final_state(spark, sf_dir):
             assert asof.get(fp) == st, fp
     # the views genuinely differ (batches 4/5 add new content)
     assert asof != final
+
+
+def _numbered(spark, n_rows, batch):
+    """(id, payload, batch) rows, ``batch`` an int column computed by the
+    SQL expression ``batch`` over ``id``."""
+    return spark.range(n_rows).select(
+        "id",
+        F.concat(F.lit("row-"), F.col("id").cast("string")).alias("payload"),
+        F.expr(batch).cast("int").alias("batch"),
+    )
+
+
+def test_stage_batches_writes_one_file_per_batch(spark, tmp_path):
+    """One staging pass: exactly one ``batch-i.parquet`` per batch, file i
+    holds exactly batch i's rows (without the ``batch`` column), mtimes
+    strictly ascend with i, and nothing of the pass is left behind."""
+    import os
+
+    arrivals = str(tmp_path / "arrivals")
+    ingest._stage_batches(arrivals, 4, lambda: _numbered(spark, 50, "id % 4"))
+    assert sorted(os.listdir(arrivals)) == [
+        "_staged", *(f"batch-{i}.parquet" for i in range(4))
+    ]
+    mtimes = []
+    for i in range(4):
+        path = os.path.join(arrivals, f"batch-{i}.parquet")
+        mtimes.append(os.stat(path).st_mtime)
+        part = spark.read.parquet(path)
+        assert part.columns == ["id", "payload"]
+        assert sorted(r.id for r in part.collect()) == list(range(i, 50, 4))
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 4
+
+
+def test_stage_batches_rejects_bad_batch_numbering(spark, tmp_path):
+    """A builder whose batch column skips a value or runs past n-1 would
+    shift every oracle's batch arithmetic: staging raises and leaves no
+    marker, so a later call stages again."""
+    import os
+
+    import pytest
+
+    for name, expr in (("skip", "CASE WHEN id % 4 = 2 THEN 3 ELSE id % 4 END"),
+                       ("past", "id % 5")):
+        arrivals = str(tmp_path / name)
+        with pytest.raises(ValueError, match="not exactly 0..3"):
+            ingest._stage_batches(arrivals, 4, lambda e=expr: _numbered(spark, 40, e))
+        assert not os.path.exists(os.path.join(arrivals, "_staged"))
+
+
+def test_stage_batches_with_marker_launches_no_job(spark, tmp_path):
+    """Once the marker exists, staging neither calls the builder nor
+    launches a Spark job."""
+    arrivals = str(tmp_path / "arrivals")
+    ingest._stage_batches(arrivals, 2, lambda: _numbered(spark, 10, "id % 2"))
+
+    def build():
+        raise AssertionError("builder ran with the marker present")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("restage", "second staging call")
+    try:
+        assert ingest._stage_batches(arrivals, 2, build) == arrivals
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("restage") == []
+
+
+def test_streams_share_one_arrivals_set_per_table(spark, sf_dir, monkeypatch):
+    """The exact, quality, near-dup, funnel and PII streams replay one
+    documents arrivals directory; the semantic-dedup and PQ-encode
+    streams replay one embeddings arrivals directory."""
+    import pytest
+
+    from airflow_ml_pipeline_spark.operators.quality_model import (
+        stream_doc_quality_scores,
+    )
+
+    class _Replayed(Exception):
+        pass
+
+    seen = []
+
+    def _record(_spark, arrivals, *_args, **_kw):
+        seen.append(arrivals)
+        raise _Replayed
+
+    monkeypatch.setattr(ingest, "replay", _record)
+    doc_streams = (
+        ingest.run_dedup_ingest, stream_doc_quality_scores,
+        ingest.run_near_dedup_ingest, ingest.run_funnel_ingest,
+        ingest.run_pii_scrub_ingest,
+    )
+    vec_streams = (ingest.run_sem_dedup_ingest, ingest.run_pq_encode_ingest)
+    for run in doc_streams + vec_streams:
+        with pytest.raises(_Replayed):
+            run(spark, sf_dir)
+    docs, vecs = seen[: len(doc_streams)], seen[len(doc_streams):]
+    assert len(set(docs)) == 1 and len(set(vecs)) == 1
+    assert docs[0] != vecs[0]

@@ -46,7 +46,7 @@ def test_stream_semantic_batch_retry_is_idempotent(spark, sf_dir):
     same rows — survivors and store byte-converge."""
     survivors_dir = ingest.run_sem_dedup_ingest(spark, sf_dir)
     arrivals, store = ingest.state_dirs(
-        "sem", sf_dir, "embeddings", "arrivals", "store"
+        "vec", sf_dir, "embeddings", "arrivals", "sem_store"
     )
     last = ingest.SEM_N_BATCHES - 1
     before = sorted(
@@ -73,7 +73,7 @@ def test_stream_semantic_store_records_every_arrival(spark, sf_dir):
     vectors included — the batch twin's prune rule compares against
     pruned vectors too), partitioned by the staged batch."""
     ingest.run_sem_dedup_ingest(spark, sf_dir)
-    (store,) = ingest.state_dirs("sem", sf_dir, "embeddings", "store")
+    (store,) = ingest.state_dirs("vec", sf_dir, "embeddings", "sem_store")
     n_store = spark.read.option("basePath", store).parquet(store).count()
     n_all = load_table(spark, sf_dir, "embeddings").count()
     assert n_store == n_all
@@ -105,6 +105,24 @@ def test_range_staging_rejects_non_dense_vec_ids(spark, tmp_path, monkeypatch):
         ingest, "load_table", lambda _s, _d, _t: sparse
     )
     with pytest.raises(RuntimeError, match="dense 0..n-1 vec_ids"):
+        ingest.stage_range_vec_batches(
+            spark, "/nonexistent-sf", arrivals=str(tmp_path / "arr")
+        )
+    assert not (tmp_path / "arr").exists()
+
+
+def test_range_staging_rejects_negative_vec_id(spark, tmp_path, monkeypatch):
+    """A negative vec_id truncates into batch 0, where the staging pass's
+    batch check cannot see it: the density guard must reject it."""
+    import pytest
+
+    shifted = spark.range(8).select(
+        (F.col("id") - 1).alias("vec_id"),
+        F.lit(0).alias("label"),
+        F.array(*[F.lit(0.1)] * 4).alias("embedding"),
+    )
+    monkeypatch.setattr(ingest, "load_table", lambda _s, _d, _t: shifted)
+    with pytest.raises(RuntimeError, match=r"span \[-1, 6\]"):
         ingest.stage_range_vec_batches(
             spark, "/nonexistent-sf", arrivals=str(tmp_path / "arr")
         )

@@ -32,6 +32,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.types import BinaryType  # noqa: E402
 
 from airflow_ml_pipeline_spark.session import get_spark  # noqa: E402
 from airflow_ml_pipeline_spark.sources.catalog import load_table  # noqa: E402
@@ -53,13 +54,16 @@ def build_store(spark, base, replicas: int, path: str) -> int:
     """batch_id=0 partition holding `replicas` copies of a (doc_id, fp)
     frame; replica 0 is the genuine corpus, later replicas carry offset
     doc_ids and salted fingerprints (accumulated-novel-content model —
-    one builder for both ingesters, review finding)."""
+    one builder for both ingesters). A salted fp keeps
+    the base's encoding: hex md5 for the exact store, 16-byte binary for
+    the near-dup postings."""
     rep = spark.range(replicas).select(F.col("id").alias("r"))
+    salted = F.md5(F.concat_ws(":", F.hex("fp"), F.col("r")))
+    if isinstance(base.schema["fp"].dataType, BinaryType):
+        salted = F.unhex(salted)
     store = base.crossJoin(rep).select(
         (F.col("doc_id") + F.col("r") * 10_000_000).alias("doc_id"),
-        F.when(F.col("r") == 0, F.col("fp"))
-        .otherwise(F.md5(F.concat_ws(":", F.col("fp"), F.col("r"))))
-        .alias("fp"),
+        F.when(F.col("r") == 0, F.col("fp")).otherwise(salted).alias("fp"),
     )
     store.write.mode("overwrite").parquet(os.path.join(path, "batch_id=0"))
     return spark.read.parquet(path).count()
