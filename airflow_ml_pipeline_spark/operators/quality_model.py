@@ -418,7 +418,7 @@ def stream_doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest.stage_mod_batches(spark, sf_dir, arrivals)
     m = margin_fold(F.col("text"))
     ingest.replay(
-        spark, arrivals, checkpoint,
+        ingest.arrivals_stream(spark, arrivals), checkpoint,
         lambda df, bid: ingest.write_batch(
             df.select(
                 "doc_id",

@@ -493,34 +493,31 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `events_anomaly_zscore` batch plan as a STREAMING tripwire:
     anomalies are appended per micro-batch as they are detected — the
     deployment shape where the tripwire actually lives (you don't re-scan
-    history to notice a spike). The events replay through the one ingest
-    skeleton (``ingest.replay`` over the events stage, event time
-    normalized at the scan boundary) into ``anomaly_batch``, which runs
-    the batch twin's own kernel (``events.anomaly_scored``) over the batch
-    plus the tail carried from the previous batch — one window/z
-    expression for both, no Python workers, and state bounded at
-    O(event_types x ANOMALY_BASELINE_ROWS) rows regardless of stream
-    length. The SAME windowed-SQL oracle checks stream and batch.
+    history to notice a spike). The events stream
+    (``sources.read_events_stream``: the staged events, event time
+    normalized at the scan boundary) replays through ``ingest.replay``
+    into ``anomaly_batch``, which runs the batch twin's own kernel
+    (``events.anomaly_scored``) over the batch plus the tail carried
+    from the previous batch — one window/z expression for both, no
+    Python workers, and state bounded at O(event_types x
+    ANOMALY_BASELINE_ROWS) rows regardless of stream length. The SAME
+    windowed-SQL oracle checks stream and batch.
 
-    The events stage replays as ONE micro-batch however many files it
-    holds: split by file, a batch's rows could precede the carried tail
-    in event time. The tail carry itself is pinned against the batch twin
-    over time-ordered slices in tests/test_streaming.py."""
-    from airflow_ml_pipeline_spark.sources.catalog import normalize_event_time
+    The events stream has no per-trigger file cap, so the stage replays
+    as ONE micro-batch however many files it holds: split by file, a
+    batch's rows could precede the carried tail in event time. The tail
+    carry itself is pinned against the batch twin over time-ordered
+    slices in tests/test_streaming.py."""
     from airflow_ml_pipeline_spark.streaming.ingest import replay, state_dirs
-    from airflow_ml_pipeline_spark.streaming.sources import stage_events_dir
+    from airflow_ml_pipeline_spark.streaming.sources import read_events_stream
 
     out, tail, checkpoint = state_dirs(
         "events", sf_dir, "events",
         "anomaly_out", "anomaly_tail", "anomaly_checkpoint",
     )
-    # a TIMESTAMP(NANOS) ts must read as bigint (normalize_event_time
-    # converts it) already when replay reads the stage's schema
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     replay(
-        spark, stage_events_dir(sf_dir), checkpoint,
+        read_events_stream(spark, sf_dir), checkpoint,
         lambda df, bid: anomaly_batch(df, bid, out, tail),
-        normalize_event_time, max_files=None,
     )
     return spark.read.schema(_ANOMALY_OUT_SCHEMA).parquet(out).select(
         "event_id", "event_type", "ts_us", "value", "z"

@@ -5,8 +5,7 @@ express).
 Two state machines live here: per-user running (count, total, max) state
 that emits the updated snapshot each batch — with an AvailableNow replay
 the final snapshot per user equals the batch aggregate, which is how the
-declared query is oracle-checked — also on the Spark 4
-``transformWithStateInPandas`` API; and a per-user gap sessionizer with an
+declared query is oracle-checked — and a per-user gap sessionizer with an
 event-time timeout. A state machine whose per-batch step a windowed plan
 can express (the anomaly z-score tripwire) runs on the ingest skeleton
 instead, with no Python workers (``streaming/queries.py::anomaly_batch``).
@@ -15,7 +14,6 @@ instead, with no Python workers (``streaming/queries.py::anomaly_batch``).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,61 +55,6 @@ def user_running_totals(stream: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def user_running_totals_tws(stream: DataFrame) -> DataFrame:
-    """Same per-user running-totals state machine on the Spark 4
-    ``transformWithStateInPandas`` API (the successor to
-    applyInPandasWithState): typed ValueState handles, explicit processor
-    lifecycle (init/handleInputRows/close), composable timers. Kept
-    alongside the legacy operator so both stateful surfaces stay covered.
-
-    Requires a working ``google.protobuf`` (the TWS driver worker speaks
-    protobuf to the JVM); this container ships a broken protobuf, so the
-    operator is exercised by a skip-gated test rather than a declared
-    query (tests/test_streaming.py::test_transform_with_state_totals).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-            if self._totals.exists():
-                n, total, mx = self._totals.get()
-            else:
-                n, total, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                mx = max(mx, float(pdf["value"].max()))
-            self._totals.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

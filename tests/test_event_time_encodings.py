@@ -17,6 +17,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from airflow_ml_pipeline_spark.sources.catalog import normalize_event_time
+from airflow_ml_pipeline_spark.streaming.sources import (
+    read_events_stream,
+    run_available_now,
+)
 
 # deterministic instants; the corpus stores µs precision
 INSTANTS = [
@@ -50,6 +54,8 @@ def _write(path, arrow_type, tz_aware: bool):
 def test_encoding_normalizes_to_same_instants(
     spark, tmp_path, arrow_type, tz_aware, expect_raw
 ):
+    """The batch scan and the events stream (``tmp_path`` as the sf_dir)
+    both read every encoding as the same TIMESTAMP instants."""
     path = str(tmp_path / "events.parquet")
     _write(path, arrow_type, tz_aware)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -61,6 +67,13 @@ def test_encoding_normalizes_to_same_instants(
         r.us for r in out.selectExpr("unix_micros(ts) AS us").orderBy("us").collect()
     ]
     assert micros == sorted(EXPECT_MICROS)
+
+    stream = read_events_stream(spark, str(tmp_path))
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    streamed = run_available_now(
+        stream.selectExpr("unix_micros(ts) AS us"), output_mode="append"
+    )
+    assert sorted(r.us for r in streamed.collect()) == sorted(EXPECT_MICROS)
 
 
 def test_ntz_normalization_is_session_timezone_independent(spark, tmp_path):

@@ -177,3 +177,31 @@ def test_measure_rejects_unknown_query_before_starting_spark():
     assert res.returncode == 2, res.stderr
     assert res.stderr.startswith("usage: tools/measure.py"), res.stderr
     assert "unknown queries: no_such_query" in res.stderr, res.stderr
+
+
+@pytest.mark.parametrize(
+    "argv,message",
+    [
+        (["oracle_check.py", SF_DIR, "no_such_query"],
+         "undeclared queries: no_such_query"),
+        (["oracle_check.py", "no_such_query"], "not a directory: no_such_query"),
+        (["dump_plan.py"], ""),
+        (["dump_plan.py", "out", "no_such_query"],
+         "undeclared queries: no_such_query"),
+    ],
+    ids=["oracle-unknown-name", "oracle-no-sf-dir", "plan-no-args", "plan-unknown-name"],
+)
+def test_tools_reject_bad_arguments_before_starting_spark(tmp_path, argv, message):
+    """oracle_check and dump_plan print their usage and exit 2 on a bad
+    argument, with JAVA_HOME pointing nowhere (a session start would exit
+    1), so a misspelled query name can never pass vacuously."""
+    env = {**os.environ, "JAVA_HOME": os.path.join(REPO, "no-such-java")}
+    script, *args = argv
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", script), *args],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 2, res.stderr
+    assert res.stderr.startswith(f"usage: python tools/{script}"), res.stderr
+    assert message in res.stderr, res.stderr
+    assert not (tmp_path / "out").exists()

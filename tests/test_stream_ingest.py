@@ -6,6 +6,7 @@ exists for)."""
 from __future__ import annotations
 
 import shutil
+import time
 
 from pyspark.sql import functions as F
 
@@ -493,11 +494,11 @@ def test_streams_share_one_arrivals_set_per_table(spark, sf_dir, monkeypatch):
 
     seen = []
 
-    def _record(_spark, arrivals, *_args, **_kw):
+    def _record(_spark, arrivals):
         seen.append(arrivals)
         raise _Replayed
 
-    monkeypatch.setattr(ingest, "replay", _record)
+    monkeypatch.setattr(ingest, "arrivals_stream", _record)
     doc_streams = (
         ingest.run_dedup_ingest, stream_doc_quality_scores,
         ingest.run_near_dedup_ingest, ingest.run_funnel_ingest,
@@ -510,3 +511,84 @@ def test_streams_share_one_arrivals_set_per_table(spark, sf_dir, monkeypatch):
     docs, vecs = seen[: len(doc_streams)], seen[len(doc_streams):]
     assert len(set(docs)) == 1 and len(set(vecs)) == 1
     assert docs[0] != vecs[0]
+
+
+def _stage_three(spark, tmp_path):
+    """A 3-batch ``_stage_batches`` set: file i holds ids with id % 3 == i."""
+    arrivals = str(tmp_path / "arrivals")
+    return ingest._stage_batches(
+        arrivals, 3, lambda: _numbered(spark, 30, "id % 3")
+    )
+
+
+def _run(spark, arrivals, checkpoint, batches):
+    """Replay ``arrivals``, recording each micro-batch's ids in ``batches``."""
+    ingest.replay(
+        ingest.arrivals_stream(spark, arrivals), checkpoint,
+        lambda df, bid: batches.setdefault(bid, sorted(r.id for r in df.collect())),
+    )
+
+
+def test_replay_gives_batch_i_its_rows_and_checks_reruns(spark, tmp_path):
+    """An in-turn replay gives micro-batch i exactly the rows staged with
+    batch == i, read with the marker's schema; a second call over the
+    same checkpoint runs no batch and passes the file-to-batch check."""
+    arrivals = _stage_three(spark, tmp_path)
+    assert ingest.arrivals_stream(spark, arrivals).columns == ["id", "payload"]
+    checkpoint = str(tmp_path / "checkpoint")
+    batches: dict = {}
+    _run(spark, arrivals, checkpoint, batches)
+    assert batches == {i: list(range(i, 30, 3)) for i in range(3)}
+    again: dict = {}
+    _run(spark, arrivals, checkpoint, again)
+    assert again == {}
+
+
+def test_replay_raises_when_a_file_lands_in_another_batch(spark, tmp_path):
+    """Swapping the mtimes of batch-1 and batch-2 makes the file source
+    read batch-2.parquet as micro-batch 1: replay raises."""
+    import os
+
+    import pytest
+
+    arrivals = _stage_three(spark, tmp_path)
+    one, two = (os.path.join(arrivals, f"batch-{i}.parquet") for i in (1, 2))
+    t1, t2 = os.stat(one).st_mtime, os.stat(two).st_mtime
+    os.utime(one, (t2, t2))
+    os.utime(two, (t1, t1))
+    swapped = r"batch-([12])\.parquet was not read by micro-batch \1"
+    with pytest.raises(RuntimeError, match=swapped):
+        _run(spark, arrivals, str(tmp_path / "checkpoint"), {})
+
+
+def _job_id(sc, group):
+    """The id of a one-task marker job run under ``group``."""
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for _ in range(100):  # the status store fills from the listener bus
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        if ids:
+            return ids[0]
+        time.sleep(0.05)
+    raise AssertionError(f"marker job {group} never reported")
+
+
+def test_converged_recall_launches_one_job(spark, sf_dir):
+    """Re-calling a converged ingest query stages nothing, infers no
+    arrivals schema, recounts nothing and checks the batch mapping from
+    the checkpoint's files: only the query body's store read launches a
+    job. Counted by job-id range between two marker jobs, because the
+    stream thread's jobs carry the stream's own job group."""
+    from airflow_ml_pipeline_spark.streaming.ingest import (
+        stream_semantic_dedup_ingest,
+    )
+
+    stream_semantic_dedup_ingest(spark, sf_dir)
+    sc = spark.sparkContext
+    before = _job_id(sc, "recall-before")
+    stream_semantic_dedup_ingest(spark, sf_dir)
+    after = _job_id(sc, "recall-after")
+    assert after - before - 1 <= 1

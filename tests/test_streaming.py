@@ -171,27 +171,6 @@ def test_hourly_rollup_with_tail_equals_full_batch(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_transform_with_state_totals(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas parity with the legacy stateful
-    operator (skips where protobuf — required by the TWS driver worker —
-    is unavailable, as in this container)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from airflow_ml_pipeline_spark.streaming.sources import (
-        read_events_stream,
-        run_available_now,
-    )
-    from airflow_ml_pipeline_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    stream = read_events_stream(spark, sf_dir)
-    result = run_available_now(
-        user_running_totals_tws(stream), output_mode="update"
-    )
-    rows = {r.user_id: (r.n_events, r.total_value) for r in result.collect()}
-    assert rows
-
-
 def test_stream_anomaly_equals_batch_twin(spark, sf_dir):
     """The streaming anomaly detector reproduces the batch windowed plan
     row-for-row (same ids, same 6-dp z) — stream/batch
@@ -223,6 +202,7 @@ def test_stream_anomaly_tail_carry_equals_batch_twin(spark, sf_dir, tmp_path):
     )
     from airflow_ml_pipeline_spark.streaming.ingest import (
         SESSION_N_SLICES,
+        arrivals_stream,
         replay,
         stage_time_slices,
     )
@@ -232,7 +212,7 @@ def test_stream_anomaly_tail_carry_equals_batch_twin(spark, sf_dir, tmp_path):
     arrivals = stage_time_slices(spark, sf_dir, str(tmp_path / "arrivals"))
     out, tail = str(tmp_path / "out"), str(tmp_path / "tail")
     replay(
-        spark, arrivals, str(tmp_path / "checkpoint"),
+        arrivals_stream(spark, arrivals), str(tmp_path / "checkpoint"),
         lambda df, bid: anomaly_batch(df, bid, out, tail),
     )
     assert sorted(os.listdir(tail)) == [

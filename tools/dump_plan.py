@@ -2,7 +2,8 @@
 
 Usage: python tools/dump_plan.py OUTDIR name [name ...]
 
-Writes OUTDIR/<name>.txt. Construction only — no job is executed (the
+Writes OUTDIR/<name>.txt. No name, or an undeclared one, prints the usage
+and exits 2 before Spark starts. Construction only — no job is executed (the
 lazy localCheckpoints inside query constructors may run tiny pin jobs,
 matching how every real caller constructs the plan).
 """
@@ -15,18 +16,27 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
-    outdir = sys.argv[1]
+USAGE = "usage: python tools/dump_plan.py OUTDIR name [name ...]"
+
+
+def main() -> int:
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
     names = sys.argv[2:]
+    unknown = [n for n in names if n not in qs]
+    if not names or unknown:
+        print(USAGE, file=sys.stderr)
+        if unknown:
+            print(f"undeclared queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    outdir = sys.argv[1]
     os.makedirs(outdir, exist_ok=True)
 
     from airflow_ml_pipeline_spark.session import get_spark
 
-    import __spark_entry__ as entrymod
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("dump_plan", master=f"local[{cpus}]")
-    qs = entrymod.queries()
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for name in names:
         df = qs[name](spark, sf)
@@ -38,7 +48,8 @@ def main() -> None:
             f.write(plan)
         n_ex = plan.count("Exchange")
         print(f"{name}: {len(plan)} chars, {n_ex} Exchange -> {path}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

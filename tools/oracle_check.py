@@ -4,7 +4,10 @@ Runs every declared query at a given scale factor, runs its DuckDB oracle on
 the same parquet tables, and compares row count + column names/types +
 order-insensitive value multiset. Exit code 1 on any mismatch.
 
-Usage: python tools/oracle_check.py [sf_dir] [query ...]
+Usage: python tools/oracle_check.py [--plain] [sf_dir] [query ...]
+
+A missing sf_dir or an undeclared query name prints the usage and exits 2
+before Spark starts.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 from airflow_ml_pipeline_spark.schemas import TABLE_NAMES  # noqa: E402
 from airflow_ml_pipeline_spark.session import get_spark  # noqa: E402
+
+USAGE = "usage: python tools/oracle_check.py [--plain] [sf_dir] [query ...]"
 
 
 def _norm(v) -> str:
@@ -58,6 +63,13 @@ def main() -> int:
     plain = "--plain" in sys.argv
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown or not os.path.isdir(sf_dir):
+        print(USAGE, file=sys.stderr)
+        print(f"undeclared queries: {', '.join(unknown)}" if unknown
+              else f"not a directory: {sf_dir}", file=sys.stderr)
+        return 2
 
     if plain:  # driver-fidelity mode: default confs, no engine tuning
         from pyspark.sql import SparkSession
@@ -73,7 +85,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed, passed, rows_only = [], [], []
     for name, fn in qs.items():
         if only and name not in only:
